@@ -8,8 +8,26 @@ contents as a DataFrame. The DuckDB oracle is the batch-equivalent
 SQL, so streaming correctness gets a full hash-compared CORRECTNESS
 row instead of pytest-only coverage.
 
+Every run goes through one harness, ``streaming/pipeline.stream_run``:
+a run's staging, stream and read-back execute on a child session
+cloned from the caller (state partitions derived once from the events
+source size, fail-open to the ambient setting; q439's watermark policy
+rides the same scope), so the caller's session confs are never
+written. The harness owns the source, checkpoint and sink dirs and
+removes them on exit; each start waits at most 300 s and raises on
+timeout. Two run shapes use it:
+
+- single run into a memory sink (``_run_stream``: q91-q93, q139,
+  q171, q271) — the whole source is one micro-batch;
+- chunked restarts (q222, q370, q386, q401/q416, q412, q426/q439,
+  q431, q436) — arrival chunks staged one at a time, each an
+  availableNow restart against the run's durable checkpoint and
+  parquet sink, so watermarks advance and state is reaped BETWEEN
+  batches. Results are read back from the sink and checkpointed
+  before the harness removes its dirs.
+
 Determinism notes:
-- the source is ONE parquet file (coalesce(1)) so availableNow
+- a single-run source is ONE parquet file (coalesce(1)) so availableNow
   processes everything in a single micro-batch — the watermark starts
   at -inf and nothing is ever late-dropped, making the streaming
   result exactly the batch result;
@@ -23,11 +41,6 @@ batch shapes are q11 (rollup), q50 (dedup), q37/q90 (time joins).
 
 from __future__ import annotations
 
-import itertools
-import os
-import shutil
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -35,112 +48,28 @@ from g_etl_spark.queries import register
 from g_etl_spark.streaming import pipeline as sp
 from g_etl_spark.tables import load
 
-_RUN_IDS = itertools.count()
 
-_STREAM_PART_BYTES = 64 << 20  # ~64 MB of staged source per state partition
-
-
-def _stream_partitions(spark: SparkSession, src_bytes: int) -> int:
-    """Scale-adaptive shuffle/state partition count for a stream run
-    (guide §2.2 fewer-larger partitions, §6 small-files).
-
-    Every stateful streaming operator creates one state-store
-    instance PER shuffle partition PER micro-batch (delta + commit
-    files through the checkpoint file manager), so partition count is
-    pure fixed overhead when the staged source is small: at the
-    ambient 32 the state-commit I/O dominated the availableNow runs
-    (measured sf0.001: q401 46 s → 12 s, q386 20 s → 8 s at 4
-    partitions). Derive the count from the source bytes (~64 MB per
-    partition, floor 1) and NEVER raise it above the ambient session
-    setting — on a cluster the ambient (cluster-sized) value wins
-    untouched, so this is derive-down only, not a local[32] tuning;
-    SPARK_GRAFT_STREAM_PARTITIONS overrides for deployments that
-    size streaming state explicitly. Results are partition-count
-    independent (the whole family is oracle-hash-gated; watermarks
-    advance between micro-batches globally, never per-partition).
-    """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    ambient = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(ambient, src_bytes // _STREAM_PART_BYTES + 1))
+def _events_run(
+    spark: SparkSession, sf_dir: str, name: str, confs: dict | None = None
+):
+    """The family's harness scope: every run sizes its state
+    partitions off the events source it stages from."""
+    return sp.stream_run(spark, f"{sf_dir}/events.parquet", name, confs)
 
 
-def _set_stream_shuffle(
-    spark: SparkSession, sf_dir: str | None = None, src_bytes: int | None = None
-) -> str:
-    """Apply the scale-adaptive stream partition count; returns the
-    previous setting for the caller's ``finally`` block
-    (``_restore_stream_shuffle`` is None-safe so a failure before
-    this call still restores cleanly)."""
-    if src_bytes is None:
-        src_bytes = 0
-        try:
-            p = os.path.join(sf_dir, "events.parquet")
-            src_bytes = (
-                os.path.getsize(p)
-                if os.path.isfile(p)
-                else sum(
-                    os.path.getsize(os.path.join(r, f))
-                    for r, _, fs in os.walk(p)
-                    for f in fs
-                )
-            )
-        except (OSError, TypeError):
-            pass
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(_stream_partitions(spark, src_bytes)))
-    return prev
-
-
-def _restore_stream_shuffle(spark: SparkSession, prev: str | None) -> None:
-    if prev is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _run_stream(spark: SparkSession, source_df: DataFrame, build, mode: str) -> DataFrame:
+def _run_stream(
+    spark: SparkSession, sf_dir: str, source_df: DataFrame, build, mode: str
+) -> DataFrame:
     """Stage `source_df` as a single-file stream source, run the
     streaming transform `build(stream_df)` into a memory sink with
-    trigger=availableNow, and return the sink table."""
-    run = next(_RUN_IDS)
-    name = f"stream_equiv_{run}"
-    src = tempfile.mkdtemp(prefix=f"g_etl_{name}_")
-    _prev_parts = None
-    try:
-        source_df.coalesce(1).write.mode("overwrite").parquet(src)
-        _prev_parts = _set_stream_shuffle(
-            spark,
-            src_bytes=sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(src)
-                for f in fs
-            ),
-        )
-        stream = sp.read_parquet_stream(
-            spark, src, schema=source_df.schema, max_files_per_trigger=10_000
-        )
-        q = (
-            build(stream)
-            .writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination returns False on timeout; a partial memory
-        # sink must never masquerade as the complete result, and the
-        # source dir must outlive the query (it may still be reading).
-        if not q.awaitTermination(300):
-            q.stop()
-            q.awaitTermination(30)
-            raise RuntimeError(f"stream {name} did not finish within 300s")
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src, ignore_errors=True)
+    trigger=availableNow, and return the sink table (on the run's
+    session)."""
+    with _events_run(spark, sf_dir, "stream_equiv") as run:
+        src = run.stage(source_df, "src")
+        run.start(build(run.read(src, source_df.schema)), mode, memory=True)
     # the memory sink holds the rows driver-side after the query ends;
     # bounded by the aggregated/deduped result size, not the stream.
-    return spark.table(name)
+    return run.spark.table(run.name)
 
 
 @register(
@@ -164,7 +93,7 @@ def q91_stream_rollup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day, event_type) inside the watermark horizon — bounded.
     """
     events = load(spark, sf_dir, "events")
-    out = _run_stream(spark, events, sp.streaming_event_rollup, "complete")
+    out = _run_stream(spark, sf_dir, events, sp.streaming_event_rollup, "complete")
     return out.orderBy("day", "event_type")
 
 
@@ -191,6 +120,7 @@ def q92_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = events.unionByName(events.filter(F.col("event_id") % 10 == 0))
     out = _run_stream(
         spark,
+        sf_dir,
         corpus,
         lambda s: sp.streaming_dedup(s, ["event_id"], watermark="1 day"),
         "append",
@@ -231,7 +161,7 @@ def q93_stream_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reaped as it advances.
     """
     events = load(spark, sf_dir, "events")
-    out = _run_stream(spark, events, sp.streaming_followup_join, "append")
+    out = _run_stream(spark, sf_dir, events, sp.streaming_followup_join, "append")
     return out.select(
         "user_id",
         "first_id",
@@ -300,6 +230,7 @@ def q139_stream_session_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     out = _run_stream(
         spark,
+        sf_dir,
         events,
         lambda s: sp.streaming_sessionize(s, gap_minutes=30, watermark="1 hour"),
         "append",
@@ -367,7 +298,7 @@ def q171_stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max(rho).alias("rho"))
         )
 
-    out = _run_stream(spark, e, build, "complete")
+    out = _run_stream(spark, sf_dir, e, build, "complete")
     return out.orderBy("di", "bucket")
 
 
@@ -442,50 +373,28 @@ def q222_stream_watermark_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     |open windows| x |keys|, not corpus; the restart loop proves the
     recovery path the single-run queries can't.
     """
-    events = load(spark, sf_dir, "events").select("event_id", "ts")
-    ak = F.unix_micros("ts") + (F.col("event_id") % 797) * _WMDROP_JIT_US
-    chunked = events.withColumn(
-        "k", F.ntile(_WMDROP_CHUNKS).over(Window.orderBy(ak.asc(), F.col("event_id")))
-    )
-    run = next(_RUN_IDS)
-    src = tempfile.mkdtemp(prefix=f"g_etl_wmdrop_src_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_wmdrop_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_wmdrop_sink_{run}_")
-    schema = events.schema
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
+    with _events_run(spark, sf_dir, "wmdrop") as run:
+        events = load(run.spark, sf_dir, "events").select("event_id", "ts")
+        ak = F.unix_micros("ts") + (F.col("event_id") % 797) * _WMDROP_JIT_US
+        chunked = events.withColumn(
+            "k",
+            F.ntile(_WMDROP_CHUNKS).over(Window.orderBy(ak.asc(), F.col("event_id"))),
+        )
         for k in range(1, _WMDROP_CHUNKS + 1):
-            chunked.where(F.col("k") == k).select("event_id", "ts").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            q = (
-                sp.read_parquet_stream(
-                    spark, src, schema=schema, max_files_per_trigger=10_000
-                )
+            src = run.stage(
+                chunked.where(F.col("k") == k).select("event_id", "ts"), "src"
+            )
+            run.start(
+                run.read(src, events.schema)
                 .withWatermark("ts", "2 hours")
                 .groupBy(F.window("ts", "6 hours").alias("w"))
                 .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("watermark-drop stream did not finish in 300s")
-        out = spark.read.parquet(sink).select(
+        out = run.spark.read.parquet(run.dir("sink")).select(
             F.unix_micros("w.start").alias("win_start_us"),
             F.col("n").cast("long").alias("n"),
         )
         return out.orderBy("win_start_us").localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 @register(
@@ -521,11 +430,11 @@ def q271_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefers them.
     """
     events = load(spark, sf_dir, "events")
-    dim = load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("nk"), "n_name"
-    )
 
     def build(stream):
+        dim = load(stream.sparkSession, sf_dir, "nation").select(
+            F.col("n_nationkey").alias("nk"), "n_name"
+        )
         ev = stream.select(
             F.when(F.col("user_id") % 10 < 7, F.lit(0))
             .otherwise((F.col("user_id") % 25).cast("int"))
@@ -541,7 +450,7 @@ def q271_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    out = _run_stream(spark, events, build, "complete")
+    out = _run_stream(spark, sf_dir, events, build, "complete")
     return out.orderBy("n_name")
 
 
@@ -643,63 +552,14 @@ def q370_stream_union_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source ntiles (harness-only, the q222 exemption — production
     chunks are the ingest files themselves).
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    ak = F.unix_micros("ts") + F.when(
-        F.col("event_type") == "click", (F.col("event_id") % 89) * _FANIN_JIT_A_US
-    ).otherwise((F.col("event_id") % 797) * _FANIN_JIT_B_US)
-    chunked = events.select(
-        "event_id", "event_type", "ts",
-        F.ntile(_FANIN_CHUNKS)
-        .over(Window.partitionBy("event_type").orderBy(ak.asc(), F.col("event_id")))
-        .alias("k"),
-    )
-    run = next(_RUN_IDS)
-    src_a = tempfile.mkdtemp(prefix=f"g_etl_fanin_a_{run}_")
-    src_b = tempfile.mkdtemp(prefix=f"g_etl_fanin_b_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_fanin_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_fanin_sink_{run}_")
-    schema = "event_id long, ts timestamp"
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
+    with _events_run(spark, sf_dir, "fanin") as run:
+        events = load(run.spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
+        )
+        chunked = _fanin_chunked(events)
         for k in range(1, _FANIN_CHUNKS + 1):
-            for etype, src in (("click", src_a), ("purchase", src_b)):
-                chunked.where(
-                    (F.col("k") == k) & (F.col("event_type") == etype)
-                ).select("event_id", "ts").coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-            sa = (
-                sp.read_parquet_stream(
-                    spark, src_a, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "1 hour")
-                .withColumn("source", F.lit("click"))
-            )
-            sb = (
-                sp.read_parquet_stream(
-                    spark, src_b, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "12 hours")
-                .withColumn("source", F.lit("purchase"))
-            )
-            q = (
-                sa.unionByName(sb)
-                .groupBy(F.window("ts", "6 hours").alias("w"), "source")
-                .agg(F.count(F.lit(1)).alias("n_kept"))
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("fan-in stream did not finish in 300s")
-        kept = spark.read.parquet(sink).select(
+            _fanin_restart(run, chunked, k)
+        kept = run.spark.read.parquet(run.dir("sink")).select(
             F.unix_micros("w.start").alias("win_start_us"),
             "source",
             F.col("n_kept").cast("long").alias("n_kept"),
@@ -722,12 +582,6 @@ def q370_stream_union_watermarks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("win_start_us", "source")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src_a, ignore_errors=True)
-        shutil.rmtree(src_b, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 _TTL_CHUNKS = 4
@@ -828,43 +682,30 @@ def q386_stream_state_ttl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is part of the contract). State per user stays one
     (start, last, n) triple; the Arrow batch path is q139's.
     """
-    events = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    chunked = events.select(
-        "user_id", "ts", "event_id",
-        F.ntile(_TTL_CHUNKS)
-        .over(Window.orderBy(F.col("ts").asc(), F.col("event_id").asc()))
-        .alias("k"),
-    )
-    run = next(_RUN_IDS)
-    src = tempfile.mkdtemp(prefix=f"g_etl_ttl_src_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_ttl_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_ttl_sink_{run}_")
-    schema = "user_id long, ts timestamp, event_id long"
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
+    with _events_run(spark, sf_dir, "ttl") as run:
+        events = load(run.spark, sf_dir, "events").select(
+            "user_id", "ts", "event_id"
+        )
+        chunked = events.select(
+            "user_id", "ts", "event_id",
+            F.ntile(_TTL_CHUNKS)
+            .over(Window.orderBy(F.col("ts").asc(), F.col("event_id").asc()))
+            .alias("k"),
+        )
+        schema = "user_id long, ts timestamp, event_id long"
         for k in range(1, _TTL_CHUNKS + 1):
-            chunked.where(F.col("k") == k).select(
-                "user_id", "ts", "event_id"
-            ).coalesce(1).write.mode("append").parquet(src)
-            stream = sp.read_parquet_stream(
-                spark, src, schema=schema, max_files_per_trigger=10_000
+            src = run.stage(
+                chunked.where(F.col("k") == k).select("user_id", "ts", "event_id"),
+                "src",
             )
-            q = (
+            run.start(
                 sp.streaming_sessionize_labeled(
-                    stream, gap_minutes=_TTL_GAP_MIN, watermark="6 hours"
+                    run.read(src, schema),
+                    gap_minutes=_TTL_GAP_MIN,
+                    watermark="6 hours",
                 )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("TTL-audit stream did not finish in 300s")
-        out = spark.read.parquet(sink).select(
+        out = run.spark.read.parquet(run.dir("sink")).select(
             "user_id",
             F.unix_micros("session_start").alias("start_us"),
             F.unix_micros("session_end").alias("end_us"),
@@ -872,11 +713,6 @@ def q386_stream_state_ttl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "via",
         ).orderBy("user_id", "start_us")
         return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 _SSJ_CHUNKS = 4
@@ -885,6 +721,72 @@ _SSJ_JIT_C_US = 60_000_000                  # clicks: ≤88 min arrival jitter
 _SSJ_JIT_P_US = 600_000_000                 # purchases: ≤5.5 days arrival jitter
 _SSJ_DELAY_C_MS = 3600 * 1000               # click watermark 1 h
 _SSJ_DELAY_P_MS = 12 * 3600 * 1000          # purchase watermark 12 h
+
+
+def _ssj_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """q401/q416's shared run: click ⋈ purchase (same user, purchase
+    ≤ 6 h after click) as a stream-stream ``how`` join over four
+    jittered arrival chunks per side, one availableNow restart per
+    chunk against the run's checkpoint."""
+    with _events_run(spark, sf_dir, f"ssj_{how}") as run:
+        events = load(run.spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
+        )
+        jit = F.when(
+            F.col("event_type") == "click",
+            (F.col("event_id") % 89) * _SSJ_JIT_C_US,
+        ).otherwise((F.col("event_id") % 797) * _SSJ_JIT_P_US)
+        ak = F.unix_micros("ts") + jit
+        chunked = events.select(
+            "event_id", "user_id", "event_type", "ts",
+            F.ntile(_SSJ_CHUNKS)
+            .over(Window.partitionBy("event_type").orderBy(ak.asc(), "event_id"))
+            .alias("k"),
+        )
+        schema = "event_id long, user_id long, ts timestamp"
+        for k in range(1, _SSJ_CHUNKS + 1):
+            for etype in ("click", "purchase"):
+                run.stage(
+                    chunked.where(
+                        (F.col("k") == k) & (F.col("event_type") == etype)
+                    ).select("event_id", "user_id", "ts"),
+                    etype,
+                )
+            cs = (
+                run.read(run.dir("click"), schema)
+                .withWatermark("ts", "1 hour")
+                .select(
+                    F.col("event_id").alias("cid"),
+                    F.col("user_id").alias("cuid"),
+                    F.col("ts").alias("cts"),
+                )
+            )
+            ps = (
+                run.read(run.dir("purchase"), schema)
+                .withWatermark("ts", "12 hours")
+                .select(
+                    F.col("event_id").alias("pid"),
+                    F.col("user_id").alias("puid"),
+                    F.col("ts").alias("pts"),
+                )
+            )
+            run.start(
+                cs.join(
+                    ps,
+                    F.expr(
+                        "cuid = puid AND pts >= cts"
+                        " AND pts <= cts + interval 6 hours"
+                    ),
+                    how,
+                )
+            )
+        out = run.spark.read.parquet(run.dir("sink")).select(
+            "cid",
+            "pid",
+            F.unix_micros("cts").alias("cts_us"),
+            F.unix_micros("pts").alias("pts_us"),
+        ).orderBy("cid", "pid")
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -973,90 +875,7 @@ def q401_stream_stream_join_eviction(
     side's delay, not the stream length; the staging ntile is
     harness-only (q222's exemption).
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    jit = F.when(
-        F.col("event_type") == "click",
-        (F.col("event_id") % 89) * _SSJ_JIT_C_US,
-    ).otherwise((F.col("event_id") % 797) * _SSJ_JIT_P_US)
-    ak = F.unix_micros("ts") + jit
-    chunked = events.select(
-        "event_id", "user_id", "event_type", "ts",
-        F.ntile(_SSJ_CHUNKS)
-        .over(Window.partitionBy("event_type").orderBy(ak.asc(), "event_id"))
-        .alias("k"),
-    )
-    run = next(_RUN_IDS)
-    src_c = tempfile.mkdtemp(prefix=f"g_etl_ssj_c_{run}_")
-    src_p = tempfile.mkdtemp(prefix=f"g_etl_ssj_p_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_ssj_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_ssj_sink_{run}_")
-    schema = "event_id long, user_id long, ts timestamp"
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
-        for k in range(1, _SSJ_CHUNKS + 1):
-            for etype, src in (("click", src_c), ("purchase", src_p)):
-                chunked.where(
-                    (F.col("k") == k) & (F.col("event_type") == etype)
-                ).select("event_id", "user_id", "ts").coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-            cs = (
-                sp.read_parquet_stream(
-                    spark, src_c, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "1 hour")
-                .select(
-                    F.col("event_id").alias("cid"),
-                    F.col("user_id").alias("cuid"),
-                    F.col("ts").alias("cts"),
-                )
-            )
-            ps = (
-                sp.read_parquet_stream(
-                    spark, src_p, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "12 hours")
-                .select(
-                    F.col("event_id").alias("pid"),
-                    F.col("user_id").alias("puid"),
-                    F.col("ts").alias("pts"),
-                )
-            )
-            j = cs.join(
-                ps,
-                F.expr(
-                    "cuid = puid AND pts >= cts"
-                    " AND pts <= cts + interval 6 hours"
-                ),
-                "inner",
-            )
-            q = (
-                j.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("ssj stream did not finish in 300s")
-        out = spark.read.parquet(sink).select(
-            "cid",
-            "pid",
-            F.unix_micros("cts").alias("cts_us"),
-            F.unix_micros("pts").alias("pts_us"),
-        ).orderBy("cid", "pid")
-        return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src_c, ignore_errors=True)
-        shutil.rmtree(src_p, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+    return _ssj_run(spark, sf_dir, "inner")
 
 
 _DDW_TILES = 3                          # original thirds -> chunks 1,3,5
@@ -1133,22 +952,17 @@ def q412_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest rate × delay, not stream length (the whole point vs
     q92); the staging ntile is harness-only (q222's exemption).
     """
-    base = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "signup")
-        .select(
-            "event_id", "ts",
-            F.ntile(_DDW_TILES)
-            .over(Window.orderBy("ts", "event_id"))
-            .alias("tile"),
+    with _events_run(spark, sf_dir, "ddw") as run:
+        base = (
+            load(run.spark, sf_dir, "events")
+            .filter(F.col("event_type") == "signup")
+            .select(
+                "event_id", "ts",
+                F.ntile(_DDW_TILES)
+                .over(Window.orderBy("ts", "event_id"))
+                .alias("tile"),
+            )
         )
-    )
-    run = next(_RUN_IDS)
-    src = tempfile.mkdtemp(prefix=f"g_etl_ddw_src_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_ddw_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_ddw_sink_{run}_")
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
         for k in range(1, 2 * _DDW_TILES + 1):
             tile = (k + 1) // 2
             is_retry = k % 2 == 0
@@ -1161,28 +975,13 @@ def q412_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                     else F.col("ts")
                 ).alias("ts"),
             )
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            s = (
-                sp.read_parquet_stream(
-                    spark, src, schema="event_id long, ts timestamp",
-                    max_files_per_trigger=10_000,
-                )
+            src = run.stage(chunk, "src")
+            run.start(
+                run.read(src, "event_id long, ts timestamp")
                 .withWatermark("ts", "30 minutes")
                 .dropDuplicatesWithinWatermark(["event_id"])
             )
-            q = (
-                s.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("ddw stream did not finish in 300s")
-        out = spark.read.parquet(sink)
+        out = run.spark.read.parquet(run.dir("sink"))
         orig_ts = base.select(
             "event_id", F.unix_micros("ts").alias("o_ts")
         )
@@ -1199,11 +998,6 @@ def q412_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_id", "ts_us")
         )
         return res.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 @register(
@@ -1304,96 +1098,13 @@ def q416_stream_left_outer_timing(
     sides); the NULL-row set adds no state, only the eviction-time
     emission.
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    jit = F.when(
-        F.col("event_type") == "click",
-        (F.col("event_id") % 89) * _SSJ_JIT_C_US,
-    ).otherwise((F.col("event_id") % 797) * _SSJ_JIT_P_US)
-    ak = F.unix_micros("ts") + jit
-    chunked = events.select(
-        "event_id", "user_id", "event_type", "ts",
-        F.ntile(_SSJ_CHUNKS)
-        .over(Window.partitionBy("event_type").orderBy(ak.asc(), "event_id"))
-        .alias("k"),
-    )
-    run = next(_RUN_IDS)
-    src_c = tempfile.mkdtemp(prefix=f"g_etl_ssjo_c_{run}_")
-    src_p = tempfile.mkdtemp(prefix=f"g_etl_ssjo_p_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_ssjo_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_ssjo_sink_{run}_")
-    schema = "event_id long, user_id long, ts timestamp"
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
-        for k in range(1, _SSJ_CHUNKS + 1):
-            for etype, src in (("click", src_c), ("purchase", src_p)):
-                chunked.where(
-                    (F.col("k") == k) & (F.col("event_type") == etype)
-                ).select("event_id", "user_id", "ts").coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-            cs = (
-                sp.read_parquet_stream(
-                    spark, src_c, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "1 hour")
-                .select(
-                    F.col("event_id").alias("cid"),
-                    F.col("user_id").alias("cuid"),
-                    F.col("ts").alias("cts"),
-                )
-            )
-            ps = (
-                sp.read_parquet_stream(
-                    spark, src_p, schema=schema, max_files_per_trigger=10_000
-                )
-                .withWatermark("ts", "12 hours")
-                .select(
-                    F.col("event_id").alias("pid"),
-                    F.col("user_id").alias("puid"),
-                    F.col("ts").alias("pts"),
-                )
-            )
-            j = cs.join(
-                ps,
-                F.expr(
-                    "cuid = puid AND pts >= cts"
-                    " AND pts <= cts + interval 6 hours"
-                ),
-                "left_outer",
-            )
-            q = (
-                j.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("ssjo stream did not finish in 300s")
-        out = spark.read.parquet(sink).select(
-            "cid",
-            "pid",
-            F.unix_micros("cts").alias("cts_us"),
-            F.unix_micros("pts").alias("pts_us"),
-        ).orderBy("cid", "pid")
-        return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src_c, ignore_errors=True)
-        shutil.rmtree(src_p, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+    return _ssj_run(spark, sf_dir, "left_outer")
 
 
 def _progress_wm_us(q) -> int:
     """Engine-reported watermark of a finished run's last progress,
     in µs (ms-granular — watermarks are ms in the engine; 0 when the
-    watermark never advanced). Shared by q426/q431."""
+    watermark never advanced). Shared by q426/q431/q439."""
     from datetime import datetime, timezone
 
     lp = q.lastProgress
@@ -1407,7 +1118,7 @@ def _progress_wm_us(q) -> int:
 
 
 def _fanin_chunked(events):
-    """q370/q426/q431's shared per-source arrival chunking."""
+    """q370/q426/q431/q439's shared per-source arrival chunking."""
     ak = F.unix_micros("ts") + F.when(
         F.col("event_type") == "click",
         (F.col("event_id") % 89) * _FANIN_JIT_A_US,
@@ -1424,48 +1135,89 @@ def _fanin_chunked(events):
     )
 
 
-def _fanin_restart(spark, chunked, k, src_a, src_b, sink, ckpt, tag):
+def _fanin_restart(run: sp.StreamRun, chunked: DataFrame, k: int):
     """Stage chunk k's files for both sources and run one
     availableNow restart of the fan-in union rollup against the
-    shared checkpoint; returns the finished StreamingQuery (q426
+    run's checkpoint; returns the finished StreamingQuery (q426
     reads its watermark, q431 its state metrics)."""
     schema = "event_id long, ts timestamp"
-    for etype, src in (("click", src_a), ("purchase", src_b)):
-        chunked.where(
-            (F.col("k") == k) & (F.col("event_type") == etype)
-        ).select("event_id", "ts").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    sa = (
-        sp.read_parquet_stream(
-            spark, src_a, schema=schema, max_files_per_trigger=10_000
+    for etype in ("click", "purchase"):
+        run.stage(
+            chunked.where(
+                (F.col("k") == k) & (F.col("event_type") == etype)
+            ).select("event_id", "ts"),
+            etype,
         )
+    sa = (
+        run.read(run.dir("click"), schema)
         .withWatermark("ts", "1 hour")
         .withColumn("source", F.lit("click"))
     )
     sb = (
-        sp.read_parquet_stream(
-            spark, src_b, schema=schema, max_files_per_trigger=10_000
-        )
+        run.read(run.dir("purchase"), schema)
         .withWatermark("ts", "12 hours")
         .withColumn("source", F.lit("purchase"))
     )
-    q = (
+    return run.start(
         sa.unionByName(sb)
         .groupBy(F.window("ts", "6 hours").alias("w"), "source")
         .agg(F.count(F.lit(1)).alias("n_kept"))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        q.awaitTermination(30)
-        raise RuntimeError(f"{tag} stream did not finish in 300s")
-    return q
+
+
+def _watermark_trajectory(
+    spark: SparkSession, sf_dir: str, policy: str
+) -> DataFrame:
+    """q426/q439's shared body: the fan-in restarts under
+    multipleWatermarkPolicy ``policy`` (scoped to the run), with each
+    (window, source) tagged by the restart that flushed it and the
+    watermark that restart committed."""
+    confs = {"spark.sql.streaming.multipleWatermarkPolicy": policy}
+    with _events_run(spark, sf_dir, f"traj_{policy}", confs) as run:
+        events = load(run.spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
+        )
+        chunked = _fanin_chunked(events)
+        sink = run.dir("sink")
+        wm_after: dict[int, int] = {}
+        emitted_at: dict[tuple[int, str], int] = {}
+        seen: set[tuple[int, str]] = set()
+        for k in range(1, _FANIN_CHUNKS + 1):
+            wm_after[k] = _progress_wm_us(_fanin_restart(run, chunked, k))
+            cur = {
+                (r["ws"], r["source"])
+                for r in run.spark.read.parquet(sink)
+                .select(F.unix_micros("w.start").alias("ws"), "source")
+                .collect()  # bounded: |timeline windows| × |sources|
+            }
+            for key in cur - seen:
+                emitted_at[key] = k
+            seen = cur
+        emap = run.spark.createDataFrame(
+            [
+                (ws, source, k, wm_after[k])
+                for (ws, source), k in sorted(emitted_at.items())
+            ],
+            "win_start_us long, source string, emitted_at_restart long,"
+            " wm_committed_us long",
+        )
+        kept = run.spark.read.parquet(sink).select(
+            F.unix_micros("w.start").alias("win_start_us"),
+            "source",
+            F.col("n_kept").cast("long").alias("n_kept"),
+        )
+        out = (
+            kept.join(F.broadcast(emap), ["win_start_us", "source"])
+            .select(
+                "win_start_us",
+                "source",
+                "n_kept",
+                "emitted_at_restart",
+                "wm_committed_us",
+            )
+            .orderBy("win_start_us", "source")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ---- q426: the watermark TRAJECTORY itself, hash-gated -----------------
@@ -1561,65 +1313,7 @@ def q426_stream_watermark_trajectory(
     restart — timeline-grain, corpus-independent (the |days|-rollup
     boundedness class).
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    chunked = _fanin_chunked(events)
-    run = next(_RUN_IDS)
-    src_a = tempfile.mkdtemp(prefix=f"g_etl_traj_a_{run}_")
-    src_b = tempfile.mkdtemp(prefix=f"g_etl_traj_b_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_traj_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_traj_sink_{run}_")
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
-        wm_after: dict[int, int] = {}
-        emitted_at: dict[tuple[int, str], int] = {}
-        seen: set[tuple[int, str]] = set()
-        for k in range(1, _FANIN_CHUNKS + 1):
-            q = _fanin_restart(
-                spark, chunked, k, src_a, src_b, sink, ckpt, "trajectory"
-            )
-            wm_after[k] = _progress_wm_us(q)
-            cur = {
-                (r["ws"], r["source"])
-                for r in spark.read.parquet(sink)
-                .select(F.unix_micros("w.start").alias("ws"), "source")
-                .collect()  # bounded: |timeline windows| × |sources|
-            }
-            for key in cur - seen:
-                emitted_at[key] = k
-            seen = cur
-        emap = spark.createDataFrame(
-            [
-                (ws, source, k, wm_after[k])
-                for (ws, source), k in sorted(emitted_at.items())
-            ],
-            "win_start_us long, source string, emitted_at_restart long,"
-            " wm_committed_us long",
-        )
-        kept = spark.read.parquet(sink).select(
-            F.unix_micros("w.start").alias("win_start_us"),
-            "source",
-            F.col("n_kept").cast("long").alias("n_kept"),
-        )
-        out = (
-            kept.join(F.broadcast(emap), ["win_start_us", "source"])
-            .select(
-                "win_start_us",
-                "source",
-                "n_kept",
-                "emitted_at_restart",
-                "wm_committed_us",
-            )
-            .orderBy("win_start_us", "source")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src_a, ignore_errors=True)
-        shutil.rmtree(src_b, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+    return _watermark_trajectory(spark, sf_dir, "min")
 
 
 # ---- q431: state-store capacity, engine-reported vs simulated ----------
@@ -1725,22 +1419,14 @@ def q431_stream_state_capacity(
     materialization is the bounded 4-row metrics list (the q426
     boundedness class).
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    chunked = _fanin_chunked(events)
-    run = next(_RUN_IDS)
-    src_a = tempfile.mkdtemp(prefix=f"g_etl_cap_a_{run}_")
-    src_b = tempfile.mkdtemp(prefix=f"g_etl_cap_b_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_cap_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_cap_sink_{run}_")
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
+    with _events_run(spark, sf_dir, "cap") as run:
+        events = load(run.spark, sf_dir, "events").filter(
+            F.col("event_type").isin("click", "purchase")
+        )
+        chunked = _fanin_chunked(events)
         metrics = []
         for k in range(1, _FANIN_CHUNKS + 1):
-            q = _fanin_restart(
-                spark, chunked, k, src_a, src_b, sink, ckpt, "capacity"
-            )
+            q = _fanin_restart(run, chunked, k)
             prog = q.recentProgress
             rows_tot = [
                 (p.get("stateOperators") or [{}])[0].get("numRowsTotal", 0)
@@ -1761,18 +1447,11 @@ def q431_stream_state_capacity(
                     rows_tot[-1] if rows_tot else 0,
                 )
             )
-        out = spark.createDataFrame(
-            metrics,
-            "restart long, wm_committed_us long, peak_cells long,"
-            " flushed_cells long, open_cells long",
-        ).orderBy("restart")
-        return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(src_a, ignore_errors=True)
-        shutil.rmtree(src_b, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+    return spark.createDataFrame(
+        metrics,
+        "restart long, wm_committed_us long, peak_cells long,"
+        " flushed_cells long, open_cells long",
+    ).orderBy("restart").localCheckpoint(eager=True)
 
 
 # ---- q436: Python streaming source, paginated backfill -----------------
@@ -1828,35 +1507,22 @@ def q436_python_stream_source(
     """
     from g_etl_spark.sources import pygen
 
-    pygen.register_stream(spark)
-    run = next(_RUN_IDS)
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_pages_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_pages_sink_{run}_")
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
+    with _events_run(spark, sf_dir, "pages") as run:
+        pygen.register_stream(run.spark)
         # serial restart loop: _Q436_ROWS // _Q436_PAGE restarts × 300 s
         # timeout each = 20 min worst-case driver wall at the shipped
         # page count of 4 IF the stream wedges (it raises, never hangs
         # past that). Keep the page count low — each added page adds a
         # full restart + another 300 s worst-case to this bound.
         for _ in range(_Q436_ROWS // _Q436_PAGE):
-            q = (
-                spark.readStream.format("g_etl_pages")
+            run.start(
+                run.spark.readStream.format("g_etl_pages")
                 .option("rows", _Q436_ROWS)
                 .option("page", _Q436_PAGE)
                 .load()
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise RuntimeError("page stream did not finish in 300s")
         out = (
-            spark.read.parquet(sink)
+            run.spark.read.parquet(run.dir("sink"))
             .groupBy("cat")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
@@ -1866,10 +1532,6 @@ def q436_python_stream_source(
             .orderBy("cat")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 # ---- q439: the MAX multipleWatermarkPolicy trajectory ------------------
@@ -1936,8 +1598,8 @@ def q439_stream_watermark_max_policy(
 ) -> DataFrame:
     """The MAX multipleWatermarkPolicy trajectory — q426's twin with
     the non-default policy the fan-in union can opt into
-    (spark.sql.streaming.multipleWatermarkPolicy=max, set for this
-    run and restored after): the global watermark tracks the
+    (spark.sql.streaming.multipleWatermarkPolicy=max, set on the
+    run's child session only): the global watermark tracks the
     FASTEST source node, so the laggy purchase stream's late rows
     are DROPPED instead of holding every window open — the
     throughput-over-completeness trade, and the policy's cost shows
@@ -1952,71 +1614,10 @@ def q439_stream_watermark_max_policy(
     Scale: state is bounded by the FASTEST source's horizon under
     max (vs the laggiest under min — the q431 capacity argument
     inverted); the gate runs the full 4-restart cycle with the conf
-    scoped to this query and restored in finally.
+    scoped to the run's session, never the caller's.
     """
-    events = load(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    chunked = _fanin_chunked(events)
-    run = next(_RUN_IDS)
-    src_a = tempfile.mkdtemp(prefix=f"g_etl_maxp_a_{run}_")
-    src_b = tempfile.mkdtemp(prefix=f"g_etl_maxp_b_{run}_")
-    ckpt = tempfile.mkdtemp(prefix=f"g_etl_maxp_ckpt_{run}_")
-    sink = tempfile.mkdtemp(prefix=f"g_etl_maxp_sink_{run}_")
-    policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
-    prev_policy = spark.conf.get(policy_key, "min")
-    _prev_parts = _set_stream_shuffle(spark, sf_dir)
-    try:
-        spark.conf.set(policy_key, "max")
-        wm_after: dict[int, int] = {}
-        emitted_at: dict[tuple[int, str], int] = {}
-        seen: set[tuple[int, str]] = set()
-        for k in range(1, _FANIN_CHUNKS + 1):
-            q = _fanin_restart(
-                spark, chunked, k, src_a, src_b, sink, ckpt, "max-policy"
-            )
-            wm_after[k] = _progress_wm_us(q)
-            cur = {
-                (r["ws"], r["source"])
-                for r in spark.read.parquet(sink)
-                .select(F.unix_micros("w.start").alias("ws"), "source")
-                .collect()  # bounded: |timeline windows| × |sources|
-            }
-            for key in cur - seen:
-                emitted_at[key] = k
-            seen = cur
-        emap = spark.createDataFrame(
-            [
-                (ws, source, k, wm_after[k])
-                for (ws, source), k in sorted(emitted_at.items())
-            ],
-            "win_start_us long, source string, emitted_at_restart long,"
-            " wm_committed_us long",
-        )
-        kept = spark.read.parquet(sink).select(
-            F.unix_micros("w.start").alias("win_start_us"),
-            "source",
-            F.col("n_kept").cast("long").alias("n_kept"),
-        )
-        out = (
-            kept.join(F.broadcast(emap), ["win_start_us", "source"])
-            .select(
-                "win_start_us",
-                "source",
-                "n_kept",
-                "emitted_at_restart",
-                "wm_committed_us",
-            )
-            .orderBy("win_start_us", "source")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        _restore_stream_shuffle(spark, _prev_parts)
-        spark.conf.set(policy_key, prev_policy)
-        shutil.rmtree(src_a, ignore_errors=True)
-        shutil.rmtree(src_b, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
+    return _watermark_trajectory(spark, sf_dir, "max")
+
 
 # ---- q446: state-capacity ADVISOR from the watermark trajectory --------
 _Q446_BYTES_PER_KEY = 144  # window-agg state row: 2 ts bounds + source

@@ -1,6 +1,6 @@
 """Streaming ingest + rollup (beyond-reference extension, SURVEY §1.1).
 
-Two entry points:
+Entry points:
 
 - ``streaming_staging_transform``: file-source readStream → the SAME
   staging/normalize stages as batch (stages.py is stateless per-row,
@@ -12,13 +12,26 @@ Two entry points:
   over the events stream — daily counts per event_type tolerating
   late data (the streaming analogue of q11_events_daily; runnable
   against the events testdata via a rate/file source in tests).
+
+- ``stream_run``: the run harness every bounded (availableNow) stream
+  run goes through — one scoped child session, owned temp dirs, one
+  start-and-wait with a timeout.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from contextlib import contextmanager
+from typing import Iterator
+
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+_STREAM_TIMEOUT_S = 300
+_STREAM_PART_BYTES = 64 << 20  # ~64 MB of source per state partition
 
 
 def read_parquet_stream(
@@ -36,6 +49,147 @@ def read_parquet_stream(
     from g_etl_spark.tables import normalize_event_ts
 
     return normalize_event_ts(df)
+
+
+def source_bytes(spark: SparkSession, path: str) -> int | None:
+    """Total bytes under ``path`` through the Hadoop FileSystem API, so
+    local, HDFS and object-store paths size alike; None when the size
+    cannot be read (missing path, no filesystem for the scheme)."""
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return int(fs.getContentSummary(jpath).getLength())
+    except Py4JJavaError:
+        return None
+
+
+def stream_partitions(spark: SparkSession, src_bytes: int | None) -> int:
+    """Scale-adaptive shuffle/state partition count for a stream run
+    (guide §2.2 fewer-larger partitions, §6 small-files).
+
+    Every stateful streaming operator creates one state-store
+    instance PER shuffle partition PER micro-batch (delta + commit
+    files through the checkpoint file manager), so partition count is
+    pure fixed overhead when the source is small: at the ambient 32
+    the state-commit I/O dominated the availableNow runs (measured
+    sf0.001: q401 46 s → 12 s, q386 20 s → 8 s at 4 partitions).
+    Derive the count from the source bytes (~64 MB per partition,
+    floor 1) and NEVER raise it above the ambient session setting —
+    on a cluster the ambient (cluster-sized) value wins untouched, so
+    this is derive-down only. An unknown size (``None``) fails open
+    to the ambient setting, never to 1. Results are partition-count
+    independent (the streaming family is oracle-hash-gated;
+    watermarks advance between micro-batches globally, never
+    per-partition).
+    """
+    ambient = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if src_bytes is None:
+        return ambient
+    return max(1, min(ambient, src_bytes // _STREAM_PART_BYTES + 1))
+
+
+class StreamRun:
+    """One bounded stream run: a child session, its temp dirs, and
+    availableNow restarts against one checkpoint (see ``stream_run``)."""
+
+    def __init__(self, spark: SparkSession, name: str):
+        self.spark = spark
+        self.name = name
+        self._dirs: dict[str, str] = {}
+
+    def dir(self, tag: str) -> str:
+        """The run's temp dir for ``tag`` (created on first use, removed
+        when the run exits)."""
+        if tag not in self._dirs:
+            self._dirs[tag] = tempfile.mkdtemp(prefix=f"g_etl_{self.name}_{tag}_")
+        return self._dirs[tag]
+
+    def stage(self, df: DataFrame, tag: str) -> str:
+        """Append ``df`` as one parquet file to the ``tag`` source dir
+        (one arrival chunk); returns the dir."""
+        df.coalesce(1).write.mode("append").parquet(self.dir(tag))
+        return self.dir(tag)
+
+    def read(self, path: str, schema) -> DataFrame:
+        """File-source stream over staged parquet, on the run session;
+        every file present at start is taken in one micro-batch."""
+        return read_parquet_stream(
+            self.spark, path, schema=schema, max_files_per_trigger=10_000
+        )
+
+    def start(
+        self, df: DataFrame, mode: str = "append", memory: bool = False
+    ) -> StreamingQuery:
+        """Run ``df`` (built on ``self.spark``) to completion with
+        trigger=availableNow against the run's checkpoint, into the
+        run's parquet sink dir — or, with ``memory``, into an in-memory
+        table ``self.spark.table(self.name)``. Returns the finished
+        query (``lastProgress``/``recentProgress`` stay readable).
+
+        A run that does not finish within _STREAM_TIMEOUT_S is stopped
+        and raises: a partial sink must never masquerade as the
+        complete result."""
+        w = (
+            df.writeStream.outputMode(mode)
+            .option("checkpointLocation", self.dir("ckpt"))
+            .trigger(availableNow=True)
+        )
+        if memory:
+            w = w.format("memory").queryName(self.name)
+        else:
+            w = w.format("parquet").option("path", self.dir("sink"))
+        q = w.start()
+        if not q.awaitTermination(_STREAM_TIMEOUT_S):
+            q.stop()
+            q.awaitTermination(30)
+            raise RuntimeError(
+                f"stream {self.name} did not finish within {_STREAM_TIMEOUT_S}s"
+            )
+        return q
+
+    def close(self) -> None:
+        """Stop any query still running and remove the run's dirs."""
+        for q in self.spark.streams.active:
+            q.stop()
+        for d in self._dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
+def stream_run(
+    spark: SparkSession, size_path: str, name: str, confs: dict | None = None
+) -> Iterator[StreamRun]:
+    """Scope one stream run (or restart loop) to a child session.
+
+    The child is a clone of ``spark`` — it inherits the caller's
+    runtime confs (``newSession()`` would not) — with the state
+    partition count derived once from ``size_path``
+    (``stream_partitions``) plus ``confs`` applied to it alone, so
+    the caller's session is never written and a concurrent batch
+    query on it never sees the run's settings. The active session is
+    restored on exit: calls such as ``createDataFrame`` on the child
+    make it the active one, and Python data sources are looked up in
+    the active session. Every temp dir the run hands out is removed
+    on exit, also when the run raises; results must be read (or
+    checkpointed) inside the block, except a memory sink, which lives
+    on in the child session.
+    """
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    active = (SparkSession._activeSession, jsession.getActiveSession())
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    parts = stream_partitions(spark, source_bytes(spark, size_path))
+    for key, value in {"spark.sql.shuffle.partitions": parts, **(confs or {})}.items():
+        child.conf.set(key, str(value))
+    run = StreamRun(child, name)
+    try:
+        yield run
+    finally:
+        run.close()
+        SparkSession._activeSession = active[0]
+        if active[1].isDefined():
+            jsession.setActiveSession(active[1].get())
+        else:
+            jsession.clearActiveSession()
 
 
 def streaming_event_rollup(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -127,30 +281,6 @@ def streaming_followup_join(
         "inner",
     ).select(
         F.col("a_user").alias("user_id"), "first_id", "then_id", "first_ts", "then_ts"
-    )
-
-
-def start_rollup_to_parquet(
-    rollup: DataFrame, out_path: str, checkpoint: str
-) -> StreamingQuery:
-    return (
-        rollup.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def run_stream_once_to_memory(rollup: DataFrame, name: str) -> StreamingQuery:
-    """Test helper: process all available input once into an
-    in-memory sink (complete mode)."""
-    return (
-        rollup.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -44,7 +44,7 @@ AUDITED_HINT_COUNTS = {
     "queries/sampling.py": 23,    # scalar totals, |sources| weights, literal index frames, q355 scalar budget rows, q413's |sources|-grain budget/λ scalars (4 sites), q425's epoch literal frame + 4 scalar budget/λ rows, q429's 1-row runs-test moments, q464's 1-row token-total/global-CE/norm scalars (3 sites), q475's |τ|-row total/entropy frames (2 sites)
     "queries/similarity.py": 38, # k centroids/codebooks, top-k rows, scalar stats, |dims| rollups, q345/q351 scalar rows, q350's LIMIT-20 pair side, q367's k-row centroids + nprobe(≤4)-row probe sets + scalar hit rows, q371's 8-row + 5-row codebooks + 8-row subspace index, q381's 10-row anchor slice, q411's k-row centroids, q465/q473's k-row centroid scaffolds
     "queries/sketches.py": 29,   # hash-param literals, register/counter frames, |sources|² pairs, MG cap-bounded candidates, q352's |sources|-bit maps + ≤2^|sources| mask rollup
-    "queries/streaming_equiv.py": 20,  # 25-row nation dim; q426/q439's timeline-grain emission maps (|6h windows|x|sources| — |days|-class bound); q446's 4-row gwm/gprev/tot maps, timeline-grain winlife, 1-row peak, 2-row source skel (6 sites); q458's 5-row delay grid (2 sites), |grid|x|chunks| gwm/gprev maps, 4-row restart frame (4 sites); q461's same bounded frames under max policy + |grid|-row final-wm frame (6 sites)
+    "queries/streaming_equiv.py": 19,  # 25-row nation dim; q426/q439's shared timeline-grain emission map (|6h windows|x|sources| — |days|-class bound); q446's 4-row gwm/gprev/tot maps, timeline-grain winlife, 1-row peak, 2-row source skel (6 sites); q458's 5-row delay grid (2 sites), |grid|x|chunks| gwm/gprev maps, 4-row restart frame (4 sites); q461's same bounded frames under max policy + |grid|-row final-wm frame (6 sites)
     "queries/text.py": 66,       # fixed term lists, scalar stats, |sources| rollups, q354 1-row type total, q375's 1-row token-total frame, q383's 1-row best-pair argmax, q394's |terms| df + 1-row stats + 1-row feedback count, q397's 1-row baseline count, q398's 2 scalar node counts, q410's 1-row vocab count + 1-row median cutoff, q418's scalar token-total + N_1 rows, q424's 2 scalar piece-totals + 2 scalar likelihoods + the ≤(26+120)-row candidate vocab (bounded by construction), q432's 1-row cutoff + 1-row κ totals, q452's |langs| model-lang list + |langs|-row vocab + |langs|²-row self/best frames (4 sites), q453's 1-row best-pair argmax + 2 scalar token-count frames per emit (3 sites), q454's |batches|/|sources|/1-row share frames (3 sites), q445's vocab-grain costs via _ulm_estep + 1-row likelihood frames (2 sites)
     "queries/windows.py": 77,    # per-type/dow/day/priority rollups, scalars, triangular offsets, q346's ≤16-row mask/subset tables, q399's 1-row n/auc/s10/s01 moments (7 sites), q408's 1-row total, q420's 1-row global mean + 1-row Brier scalar
     "query.py": 2,               # polygon cell sets (bounded by query area)

@@ -190,23 +190,21 @@ def test_json_export_byte_compat_with_reference_format(spark):
             ).hexdigest(), f"{label} byte mismatch: {got_s!r} != {ref_s!r}"
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
+def test_streaming_rollup_matches_batch(spark):
     """The watermarked streaming rollup over the events testdata must
     equal the equivalent batch aggregation (availableNow processes
     everything, so late-drop never triggers)."""
     from g_etl_spark.tables import load
 
     events = load(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "stream_src")
-    events.write.parquet(src)
-
-    stream = sp.read_parquet_stream(spark, src, schema=events.schema)
-    q = sp.run_stream_once_to_memory(sp.streaming_event_rollup(stream), "rollup_test")
-    q.awaitTermination(120)
+    with sp.stream_run(spark, events.inputFiles()[0], "rollup_test") as run:
+        src = run.stage(events, "src")
+        rollup = sp.streaming_event_rollup(run.read(src, events.schema))
+        run.start(rollup, "complete", memory=True)
 
     got = {
         (r.day, r.event_type): (r.n, round(r.total_value, 2))
-        for r in spark.sql("SELECT * FROM rollup_test").collect()
+        for r in run.spark.sql("SELECT * FROM rollup_test").collect()
     }
     batch = {
         (r.day, r.event_type): (r.n, round(r.total_value, 2))
