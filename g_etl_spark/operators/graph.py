@@ -23,13 +23,18 @@ Design for 100 TB:
   guidance round 1: localCheckpoint pins executor storage and loses
   everything on executor death; persist recomputes from lineage).
   Lineage grows one join per round — bounded by the diameter, so no
-  checkpoint-to-HDFS is needed for real dedup graphs; an adversarial
-  long-chain graph (diameter ~n) wants the alternating
-  large-star/small-star scheme of Kiveris et al., "Connected
-  Components in MapReduce and Beyond" (SoCC'14), which converges in
-  O(log n) rounds — noted, not needed for near-dup clustering.
+  checkpoint-to-HDFS is needed for real dedup graphs.
 - The convergence check is a count() per round (a job, not a
   collect of data). Total driver round-trips = diameter + 1.
+
+Long-chain graphs (diameter ~n) go to ``connected_components_logstar``
+instead: the alternating large-star/small-star scheme of Kiveris et
+al., "Connected Components in MapReduce and Beyond" (SoCC'14), whose
+rounds are O(log n). It first contracts each partition of the edge
+set locally (union-find inside one task), so a graph that fits in a
+partition is solved with no distributed round at all, and it stops as
+soon as the edge set is a star forest rather than spending a round to
+prove that nothing changed.
 """
 
 from __future__ import annotations
@@ -37,6 +42,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+
+def _truncate(df: DataFrame, reliable_checkpoint: bool) -> DataFrame:
+    """Materialize ``df`` and cut its lineage: to the session's
+    checkpoint dir when ``reliable_checkpoint``, else executor-local."""
+    if reliable_checkpoint:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -58,8 +71,8 @@ def connected_components(
     chain): returning the partial labeling would silently split true
     components AND hand back label values that are not component
     ids. Near-dup graphs converge in single digits; for adversarial
-    diameters raise max_iter or implement the large-star/small-star
-    O(log n) alternation (module docstring).
+    diameters raise max_iter or use ``connected_components_logstar``
+    (O(log n) rounds).
 
     Lineage is TRUNCATED every round: each round's plan references
     the previous round's labels twice, so without truncation the
@@ -80,15 +93,11 @@ def connected_components(
     e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     labels = _truncate(
         e.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node"))
+        .withColumn("component", F.col("node")),
+        reliable_checkpoint,
     )
     converged = False
     for _ in range(max_iter):
@@ -113,7 +122,8 @@ def connected_components(
                 F.least(
                     F.col("component"), F.coalesce("nbr_min", F.col("component"))
                 ).alias("component"),
-            )
+            ),
+            reliable_checkpoint,
         )
         changed = joined.filter(F.col("component") != F.col("_old")).count()
         labels = joined.select("node", "component")
@@ -128,6 +138,62 @@ def connected_components(
             "log-round scheme for long-chain graphs"
         )
     return labels
+
+
+def _contract_partition(batches):
+    """mapInPandas body: union-find over one partition's ``(u, v)``
+    edges, emitting ``(node, root)`` for every non-root node, where
+    root is the minimum of the node's partition-local component.
+
+    Every edge joins two nodes of one local component, and the emitted
+    edges span each local component, so the output has exactly the
+    components of the input and the same minimum per component. The
+    only state is the node -> parent map; batches are folded in as they
+    stream. Output rows keep the canonical orientation (node > root).
+    """
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for pdf in batches:
+        for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:  # hang the larger root under the smaller
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes, roots = [], []
+    for x in parent:
+        r = find(x)
+        if r != x:
+            nodes.append(x)
+            roots.append(r)
+        if len(nodes) == 65536:
+            yield pd.DataFrame({"u": nodes, "v": roots})
+            nodes, roots = [], []
+    if nodes:
+        yield pd.DataFrame({"u": nodes, "v": roots})
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when the (u > v)-oriented edge set is already the
+    large-star/small-star fixpoint: every ``u`` sits in exactly one
+    row and no ``v`` appears as a ``u``. Then each ``v`` is the minimum
+    of its star and each star is one component. One aggregate: a node
+    fails when it is some row's ``u`` and occurs in more than one row."""
+    ends = e.select(F.col("u").alias("n"), F.lit(1).alias("as_u")).unionByName(
+        e.select(F.col("v").alias("n"), F.lit(0).alias("as_u"))
+    )
+    per_node = ends.groupBy("n").agg(
+        F.sum("as_u").alias("as_u"), F.count(F.lit(1)).alias("rows")
+    )
+    return per_node.filter((F.col("as_u") > 0) & (F.col("rows") > 1)).isEmpty()
 
 
 def connected_components_logstar(
@@ -155,35 +221,36 @@ def connected_components_logstar(
     component's minimum node, so labels read off the edges directly.
     Returns ``(node, component)`` with the same contract as
     ``connected_components`` (isolated nodes absent; component = min
-    member id). Convergence is checked exactly (count equality + one
-    left-anti probe per round — log-many rounds make the extra job
-    affordable where the diameter-bound loop could not).
+    member id); NULL and self-loop edges are dropped.
+
+    Rounds are dispatch-bound on small graphs, so two things keep
+    their number down. First, after the edges are canonicalized and
+    deduplicated, every partition is contracted locally
+    (``_contract_partition``: union-find inside one task). Spark's
+    own partition sizing decides how much of the graph one task
+    solves; a graph that lands in one partition comes out as the
+    final star forest and needs no round. Second, convergence is
+    tested BEFORE each round by ``_is_star_forest``, one aggregate
+    over the edges, instead of running a round and comparing its
+    output with its input. Raises RuntimeError if the edges are not
+    a star forest after ``max_iter`` rounds.
     """
-    def _truncate(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _sig(df: DataFrame) -> tuple:
-        # one job: (edge count, order-insensitive checksum). Equality
-        # is a cheap NECESSARY condition for set equality; the exact
-        # left-anti probe below only runs on a checksum hit, so the
-        # expensive check executes ~once per call, not per round.
-        row = df.agg(
-            F.count(F.lit(1)).alias("c"), F.sum(F.xxhash64("u", "v")).alias("h")
-        ).first()
-        return (row["c"], row["h"])
-
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
-    e = _truncate(e)
-    sig = _sig(e)
-    converged = False
-    for _ in range(max_iter):
+    e = _truncate(e.mapInPandas(_contract_partition, e.schema), reliable_checkpoint)
+    rounds = 0
+    while not _is_star_forest(e):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components_logstar did not converge in {max_iter} "
+                "rounds — max_iter is far above the O(log n) bound, so this "
+                "indicates a bug or non-numeric/NULL node ids"
+            )
+        rounds += 1
         # large-star over both directions: (v, m) for neighbors v > u
         bidir = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = bidir.groupBy("u").agg(F.min("v").alias("m"))
@@ -206,21 +273,7 @@ def connected_components_logstar(
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
         )
-        new_e = _truncate(small)
-        new_sig = _sig(new_e)
-        if new_sig == sig and (
-            new_e.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-        ):
-            converged = True
-            e = new_e
-            break
-        e, sig = new_e, new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_logstar did not converge in {max_iter} "
-            "rounds — max_iter is far above the O(log n) bound, so this "
-            "indicates a bug or non-numeric/NULL node ids"
-        )
+        e = _truncate(small, reliable_checkpoint)
     return e.select(F.col("u").alias("node"), F.col("v").alias("component")).unionByName(
         e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
     )

@@ -741,7 +741,7 @@ def q101_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per WEDGE. Work drops from 49M probe lookups to 1.2M set
     intersections over the same Σ degree² elements with far better
     locality — measured at sf0.1: 8.45 s → 4.36 s best-of-5
-    (probe_r16_q101.py; triangle/vertex/edge counts identical). The
+    (SCALE_NOTES.md "Round 16"; triangle/vertex/edge counts identical). The
     r15 two-join wedge-close (8.9 s serial, 8.5 s overlapped — the
     overlap is worth ~0.5 s and is kept here) and the degree-ordered
     orientation (r6: wedges 49.28M → 49.19M, SLOWER — near-uniform
@@ -5958,7 +5958,7 @@ def q444_maximal_shared_substrings(
     alignment, as in the suffix-array formulation).
 
     Scale: the candidate bound is Σ_gram occ(gram)² (bucketed block
-    join), never corpus² — probed at ×25 in probe_r13_ops.py; the
+    join), never corpus² — probed at ×25 (SCALE_NOTES.md "Round 13"); the
     island windows partition by (doc_a, doc_b, off), bounded by
     per-pair hit counts. At 100 TB the gram key becomes a 64-bit
     rolling hash (q51's device) and ultra-hot boilerplate grams get

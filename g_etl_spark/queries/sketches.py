@@ -1130,7 +1130,7 @@ def q204_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # non-positives. Error bounds add across merges, so the
         # no-false-negative guarantee for freq > n_p/cap survives —
         # and the per-row Python dict loop (measured 9.5s vs 1.0s
-        # for the plain groupBy at 15M rows, probe_r6c_ops) becomes
+        # for the plain groupBy at 15M rows, SCALE_NOTES.md "Round 6") becomes
         # a pandas add/nlargest per batch.
         summary = pd.Series(dtype="int64")
         for pdf in batches:

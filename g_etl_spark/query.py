@@ -260,13 +260,19 @@ class PolygonServer:
     query instead: first call builds and physically plans the
     DataFrame under serving confs (AQE off, 1 shuffle partition —
     baked in at plan time), subsequent calls re-execute it, which is
-    execution-only latency. Results are never cached — every call runs
-    the job against the index.
+    execution-only latency. No result rows are kept by this class, but
+    a hit is not a fresh scan either: re-executing the prepared plan
+    reuses the shuffle output of its first execution, so a hit runs
+    only the final stage and skips the index scan (a traced run of 4
+    served requests counts 4 jobs / 4 stages, where one full
+    execution takes 2 stages).
 
     Freshness contract: a prepared plan pins the index snapshot (the
-    parquet file listing). Call ``invalidate()`` after ingest or
-    ``compact_grid_index`` — the same explicit-rebuild contract as the
-    reference's index.
+    parquet file listing) and, through the reused shuffle output, the
+    rows read on its first execution. Call ``invalidate()`` after
+    ingest or ``compact_grid_index`` — the same explicit-rebuild
+    contract as the reference's index; without it a rebuilt index is
+    not even re-read.
     """
 
     def __init__(

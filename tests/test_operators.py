@@ -237,29 +237,83 @@ def test_connected_components_raises_on_nonconvergence(spark):
     assert {r.component for r in labels.collect()} == {0}
 
 
+def _chain(spark, n=120):
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
+
+
 def test_logstar_matches_propagation_and_handles_long_chains(spark):
     """large-star/small-star must produce the identical labeling as
-    min-label propagation on a mixed graph, and converge on a chain
-    whose diameter far exceeds propagation's round budget (the O(log n)
-    claim — Kiveris et al. SoCC'14)."""
+    min-label propagation, and converge on a chain whose diameter far
+    exceeds propagation's round budget (the O(log n) claim — Kiveris
+    et al. SoCC'14).
+
+    Each graph runs twice: as configured, where these small graphs
+    coalesce into one partition and the per-partition contraction
+    solves them outright, and with partition coalescing off, where the
+    deduplicated edges spread over every shuffle partition, the
+    contraction leaves pieces that cross partitions and the
+    distributed rounds must finish the job. Labels equal propagation's
+    on every node with a non-NULL, non-self edge; nodes whose only
+    edges are self-loops or NULL-ended are absent (logstar drops those
+    edges, propagation keeps self-loop-only nodes, so only the shared
+    nodes are compared)."""
+    import random
+
     from g_etl_spark.operators import graph as G
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 4)],
-        "id_a long, id_b long",
-    )
-    want = {r.node: r.component for r in G.connected_components(edges).collect()}
-    got = {r.node: r.component for r in G.connected_components_logstar(edges).collect()}
-    assert got == want
+    mixed = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 4)]
+    rng = random.Random(11)
+    multi = [(rng.randrange(300), rng.randrange(300)) for _ in range(260)]
+    multi += multi[:20] + [(b, a) for a, b in multi[20:40]]  # duplicates, reversals
+    multi += [(900, 900), (901, None), (None, 902), (5, 5), (7, None)]
+    cases = []
+    for pairs in (mixed, multi):
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        touched = {n for a, b in pairs if a is not None and b is not None and a != b for n in (a, b)}
+        want = {r.node: r.component for r in G.connected_components(edges, max_iter=100).collect()}
+        cases.append((edges, {n: want[n] for n in touched}))
 
-    # 120-node chain: diameter 119 — propagation would need 119 rounds,
-    # the alternation label set must still be exactly one component
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(119)], "id_a long, id_b long"
-    )
-    labels = {r.node: r.component for r in G.connected_components_logstar(chain).collect()}
-    assert set(labels) == set(range(120))
-    assert set(labels.values()) == {0}
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    try:
+        for coalesce in ("true", "false"):
+            spark.conf.set(key, coalesce)
+            for edges, want in cases:
+                got = {r.node: r.component for r in G.connected_components_logstar(edges).collect()}
+                assert got == want
+            assert not {900, 901, 902} & set(got)
+            # 120-node chain: diameter 119 — propagation would need 119
+            # rounds, the alternation label set must still be exactly
+            # one component
+            labels = {r.node: r.component for r in G.connected_components_logstar(_chain(spark)).collect()}
+            assert labels == {i: 0 for i in range(120)}
+        # uncoalesced, the chain is not solved inside one partition
+        with pytest.raises(RuntimeError, match="did not converge"):
+            G.connected_components_logstar(_chain(spark), max_iter=0)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_logstar_small_graph_costs_a_handful_of_jobs(spark):
+    """A graph that fits in one partition is solved by the per-partition
+    contraction, so the 120-node chain costs a few jobs, not one batch
+    of jobs per large-star/small-star round (89 jobs before the
+    contraction and the star-forest stop)."""
+    from g_etl_spark.operators import graph as G
+
+    sc = spark.sparkContext
+    group = "test-logstar-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        labels = {
+            r.node: r.component
+            for r in G.connected_components_logstar(_chain(spark)).collect()
+        }
+    finally:
+        sc._jsc.clearJobGroup()
+    assert labels == {i: 0 for i in range(120)}
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, jobs
 
 
 def test_multimodal_resize_binary_roundtrip(spark):
