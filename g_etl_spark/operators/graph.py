@@ -7,41 +7,16 @@ never met a threshold. This module turns an edge list into a
 (node, component) labeling with component = min node id reachable,
 entirely in DataFrame ops.
 
-Algorithm: iterative min-label propagation. Each round every node
-takes the min of its own label and its neighbors' labels; fixpoint
-when no label changes. Rounds needed = graph diameter. Near-dup
-graphs are dense star/clique neighborhoods around a shared source
-document, so the diameter is small (single digits) and propagation
-beats fancier schemes on constant factors.
-
-Design for 100 TB:
-
-- Each round is ONE shuffle: an equi-join of edges to labels on the
-  destination plus a groupBy-min on the source. Both hash-partition
-  on node id, and AQE reuses the exchange where possible.
-- Labels persist at StorageLevel.DISK_ONLY between rounds (judge
-  guidance round 1: localCheckpoint pins executor storage and loses
-  everything on executor death; persist recomputes from lineage).
-  Lineage grows one join per round — bounded by the diameter, so no
-  checkpoint-to-HDFS is needed for real dedup graphs.
-- The convergence check is a count() per round (a job, not a
-  collect of data). Total driver round-trips = diameter + 1.
-
-Long-chain graphs (diameter ~n) go to ``connected_components_logstar``
-instead: the alternating large-star/small-star scheme of Kiveris et
-al., "Connected Components in MapReduce and Beyond" (SoCC'14), whose
-rounds are O(log n). It first contracts each partition of the edge
-set locally (union-find inside one task), so a graph that fits in a
-partition is solved with no distributed round at all, and it stops as
-soon as the edge set is a star forest rather than spending a round to
-prove that nothing changed.
+The one operator, ``connected_components``, is the large-star/small-star
+scheme of Kiveris et al. (SoCC'14): O(log n) rounds whatever the
+graph's diameter, after a per-partition local contraction that solves
+a graph fitting in one partition with no distributed round.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
 def _truncate(df: DataFrame, reliable_checkpoint: bool) -> DataFrame:
@@ -50,94 +25,6 @@ def _truncate(df: DataFrame, reliable_checkpoint: bool) -> DataFrame:
     if reliable_checkpoint:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
-    """Label each node of the undirected graph ``edges`` with the
-    smallest node id in its connected component.
-
-    Returns ``(node, component)``. Isolated nodes never appear in an
-    edge list, so callers wanting singleton components union them in
-    afterwards (component = own id).
-
-    Raises RuntimeError if the fixpoint is not reached within
-    ``max_iter`` rounds (graph diameter > max_iter, e.g. a long
-    chain): returning the partial labeling would silently split true
-    components AND hand back label values that are not component
-    ids. Near-dup graphs converge in single digits; for adversarial
-    diameters raise max_iter or use ``connected_components_logstar``
-    (O(log n) rounds).
-
-    Lineage is TRUNCATED every round: each round's plan references
-    the previous round's labels twice, so without truncation the
-    logical plan doubles per round and Catalyst planning time goes
-    exponential past ~6 rounds (persist caches data, not the plan —
-    measured: an 8-edge chain took minutes).
-    ``reliable_checkpoint=False`` (default) truncates with
-    localCheckpoint — measured 62 s at 20M edges, but partitions on a
-    lost executor cannot be recomputed (rerun the job).
-    ``reliable_checkpoint=True`` writes each round to the session's
-    checkpoint dir (``sc.setCheckpointDir``; session.py points it at
-    a temp dir locally, shared storage on a cluster) — lost-executor
-    safe, measured 282 s at the same scale (the round recomputes once
-    more and 30M rows hit storage per round). Flip it on for long
-    cluster runs where a restart costs more than 4.5×.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-
-    labels = _truncate(
-        e.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node")),
-        reliable_checkpoint,
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("component").alias("nbr_label")
-                ),
-                "b",
-            )
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("nbr_label").alias("nbr_min"))
-        )
-        # one relation carries BOTH the new label and the old one, so
-        # the convergence check is a filter-count on it — not a
-        # second full-size self-join per round (measured 342 s -> 62 s
-        # at 20M edges; see SCALE_NOTES.md)
-        joined = _truncate(
-            labels.join(nbr_min, "node", "left").select(
-                "node",
-                F.col("component").alias("_old"),
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-            ),
-            reliable_checkpoint,
-        )
-        changed = joined.filter(F.col("component") != F.col("_old")).count()
-        labels = joined.select("node", "component")
-        if changed == 0:
-            converged = True
-            break
-    e.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter or use a "
-            "log-round scheme for long-chain graphs"
-        )
-    return labels
 
 
 def _contract_partition(batches):
@@ -196,7 +83,7 @@ def _is_star_forest(e: DataFrame) -> bool:
     return per_node.filter((F.col("as_u") > 0) & (F.col("rows") > 1)).isEmpty()
 
 
-def connected_components_logstar(
+def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
@@ -205,9 +92,7 @@ def connected_components_logstar(
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — converges in O(log n) rounds regardless of diameter,
-    the scheme ``connected_components`` defers to for long-chain
-    graphs (its rounds = diameter).
+    SoCC'14) — converges in O(log n) rounds regardless of diameter.
 
     Per round, over the canonically-oriented edge set (u > v):
 
@@ -219,9 +104,11 @@ def connected_components_logstar(
     Each op is one groupBy-min plus one equi-join, both partitioned
     on node id. At fixpoint the edge set is stars rooted at each
     component's minimum node, so labels read off the edges directly.
-    Returns ``(node, component)`` with the same contract as
-    ``connected_components`` (isolated nodes absent; component = min
-    member id); NULL and self-loop edges are dropped.
+    Returns ``(node, component)``, component = the smallest node id
+    in the node's component. Isolated nodes never appear in an edge
+    list, so callers wanting singleton components union them in
+    afterwards (component = own id); NULL and self-loop edges are
+    dropped.
 
     Rounds are dispatch-bound on small graphs, so two things keep
     their number down. First, after the edges are canonicalized and
@@ -234,6 +121,12 @@ def connected_components_logstar(
     over the edges, instead of running a round and comparing its
     output with its input. Raises RuntimeError if the edges are not
     a star forest after ``max_iter`` rounds.
+
+    Every truncation (after the contraction and after each round) is
+    executor-local by default; ``reliable_checkpoint=True`` writes it
+    to the session's checkpoint dir (``sc.setCheckpointDir``) instead,
+    so a run survives a lost executor at the cost of writing the edge
+    set once per round.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -246,7 +139,7 @@ def connected_components_logstar(
     while not _is_star_forest(e):
         if rounds == max_iter:
             raise RuntimeError(
-                f"connected_components_logstar did not converge in {max_iter} "
+                f"connected_components did not converge in {max_iter} "
                 "rounds — max_iter is far above the O(log n) bound, so this "
                 "indicates a bug or non-numeric/NULL node ids"
             )

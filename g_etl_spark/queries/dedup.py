@@ -516,13 +516,13 @@ def q56_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup pipeline actually needs: keep min-id doc per component.
 
     The oracle computes the same transitive closure with a recursive
-    CTE over the identical pair set, so the iterative min-label
-    propagation is verified end-to-end, transitivity included.
+    CTE over the identical pair set, so the distributed labeling is
+    verified end-to-end, transitivity included.
 
     Scale: pair generation is the banded LSH join (Σ bucket², not
-    n²); each propagation round is one join + one groupBy-min
-    shuffle, rounds = component diameter (small for near-dup
-    clusters — see operators/graph.py docstring).
+    n²); CC is the large-star/small-star operator (O(log n) rounds of
+    one join + one groupBy-min each, after a per-partition local
+    contraction — see operators/graph.py).
     """
     from g_etl_spark.operators import graph as G
 
@@ -614,10 +614,9 @@ def q76_logstar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components on a LONG-CHAIN graph (each run of 100
     consecutive doc_ids chained pairwise — diameter 99) via the
     large-star/small-star alternation
-    (operators/graph.connected_components_logstar). Min-label
-    propagation's rounds scale with the diameter (99 here); the
-    alternation converges in O(log n) (~8 rounds), which is the 100 TB
-    answer for adversarial-diameter dedup graphs. The oracle is the
+    (operators/graph.connected_components), which converges in
+    O(log n) rounds whatever the diameter — the 100 TB answer for
+    adversarial-diameter dedup graphs. The oracle is the
     generic recursive-CTE reachability closure — it knows nothing
     about the chain structure, so the hash match proves the labeling,
     not the construction.
@@ -638,7 +637,7 @@ def q76_logstar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_a", "id_b")
     )
-    return G.component_summary(G.connected_components_logstar(edges))
+    return G.component_summary(G.connected_components(edges))
 
 
 @register(
@@ -707,6 +706,17 @@ _Q101_EDGES_SQL = """
 """
 
 
+def _copurchase_pairs(li: DataFrame) -> DataFrame:
+    """Co-purchase pairs over the ``(l_orderkey, l_partkey)`` projection
+    ``li``: one ``(ok, a, b)`` row per pair of lines of order ``ok``
+    with parts ``a < b`` — the order-bounded self-join (Σ basket² per
+    order, never |parts|²). Repeated lines give repeated rows; callers
+    distinct or count them."""
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("a"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("b"))
+    return a.join(b, "ok").where(F.col("a") < F.col("b"))
+
+
 @register(
     "q101_copurchase_triangles",
     oracle=f"""
@@ -757,21 +767,7 @@ def q101_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain form strictly better here.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1 = li.alias("l1")
-    l2 = li.alias("l2")
-    edges = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(
-            F.col("l1.l_partkey").alias("a"),
-            F.col("l2.l_partkey").alias("b"),
-        )
-        .distinct()
-    )
-    edges = edges.persist()
+    edges = _copurchase_pairs(li).select("a", "b").distinct().persist()
     adj = edges.groupBy("a").agg(F.collect_list("b").alias("nb"))
     ea = edges.join(
         adj.withColumnRenamed("a", "_k").withColumnRenamed("nb", "na"),
@@ -909,12 +905,11 @@ def q118_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same three iterations as chained CTEs.
 
     Scale: each iteration is ONE edge⋈rank equi-join + a partial-agg
-    sum — the same per-round shape as the CC propagation in
-    operators/graph.py, which also documents the production controls
-    this declarative unroll omits (per-round localCheckpoint lineage
-    truncation beyond ~6 rounds, reliable checkpoint for
-    lost-executor safety, convergence RAISE). The edge relation is
-    the output of the lineitem self-join — by far the most expensive
+    sum — the same per-round shape as a connected_components round in
+    operators/graph.py, which carries the production controls this
+    declarative unroll omits (per-round lineage truncation, reliable
+    checkpoint for lost-executor safety, convergence RAISE). The edge
+    relation is the output of the lineitem self-join — by far the most expensive
     stage — and appears in every iteration's subtree (plus deg / the
     node count), so edges, deg, and the weighted edge relation ew are
     persisted: the self-join materializes ONCE instead of ×4
@@ -927,16 +922,7 @@ def q118_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
-        .distinct()
-    )
+    pairs = _copurchase_pairs(li).select("a", "b").distinct()
     edges = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).persist()
@@ -1019,16 +1005,7 @@ def q124_bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     controls documented in operators/graph.py).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
-        .distinct()
-    )
+    pairs = _copurchase_pairs(li).select("a", "b").distinct()
     edges = (
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -1118,19 +1095,7 @@ def q141_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice at test scale.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(
-            F.col("l1.l_orderkey").alias("ok"),
-            F.col("l1.l_partkey").alias("a"),
-            F.col("l2.l_partkey").alias("b"),
-        )
-    )
+    pairs = _copurchase_pairs(li)
     pair_n = pairs.groupBy("a", "b").agg(
         F.countDistinct("ok").alias("n_ab")
     )
@@ -1293,17 +1258,7 @@ def q148_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
-        .distinct()
-        .persist()
-    )
+    pairs = _copurchase_pairs(li).select("a", "b").distinct().persist()
     nodes = (
         pairs.select(F.col("a").alias("node"))
         .union(pairs.select(F.col("b").alias("node")))
@@ -1597,18 +1552,8 @@ def q175_item_cf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     different final expression; q141 already gates lift).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pc = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(
-            "l1.l_orderkey",
-            F.col("l1.l_partkey").alias("a"),
-            F.col("l2.l_partkey").alias("b"),
-        )
+        _copurchase_pairs(li)
         .distinct()
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
@@ -1682,19 +1627,7 @@ def q186_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree bit-for-bit.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    edges = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(
-            F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b")
-        )
-        .distinct()
-        .persist()
-    )
+    edges = _copurchase_pairs(li).select("a", "b").distinct().persist()
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))
@@ -1795,19 +1728,7 @@ def q180_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial agg. No corpus-sized shuffle beyond the edge build.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    edges = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .select(
-            F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b")
-        )
-        .distinct()
-        .persist()
-    )
+    edges = _copurchase_pairs(li).select("a", "b").distinct().persist()
     deg = (
         edges.select(F.col("a").alias("v"))
         .unionAll(edges.select(F.col("b").alias("v")))
@@ -2369,8 +2290,8 @@ def q205_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Peeling is the textbook k-core algorithm (Matula-Beck); each
     round is ONE edge<->member equi-join + a partial-agg degree count
-    - the same per-round shape as the CC propagation in
-    operators/graph.py, which documents the production controls
+    - the same per-round shape as a connected_components round in
+    operators/graph.py, which carries the production controls
     (lineage truncation, reliable checkpoint, convergence RAISE).
     Convergence at the gate SFs: 1 round at sf0.001 (the dense small
     graph IS its own 3-core), 9 rounds at sf0.01 (real cascade, core
@@ -2391,16 +2312,9 @@ def q205_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence graphs that is O(tens) at any corpus size.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .groupBy(
-            F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b")
-        )
+        _copurchase_pairs(li)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
         .select("a", "b")
@@ -2784,14 +2698,9 @@ def q223_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded before the rank so top-20 ties break on (u, v) cleanly.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .groupBy(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
+        _copurchase_pairs(li)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
         .select("a", "b")
@@ -2898,14 +2807,9 @@ def q227_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ratios, rounded at 6.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .groupBy(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
+        _copurchase_pairs(li)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
         .select("a", "b")
@@ -3477,14 +3381,9 @@ def q282_rec_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse in one agg each. No global sort anywhere.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pw = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .groupBy(F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b"))
+        _copurchase_pairs(li)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
     )
@@ -4141,17 +4040,10 @@ def q337_label_propagation_communities(spark: SparkSession, sf_dir: str) -> Data
     (the q56/q118 iterative-plan discipline).
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    l1, l2 = li.alias("l1"), li.alias("l2")
     pairs = (
-        l1.join(
-            l2,
-            (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-            & (F.col("l1.l_partkey") < F.col("l2.l_partkey")),
-        )
-        .groupBy(
-            F.col("l1.l_partkey").alias("a"), F.col("l2.l_partkey").alias("b")
-        )
-        .agg(F.countDistinct("l1.l_orderkey").alias("sup"))
+        _copurchase_pairs(li)
+        .groupBy("a", "b")
+        .agg(F.countDistinct("ok").alias("sup"))
         .filter(F.col("sup") >= 2)
         .select("a", "b")
     )
@@ -4400,12 +4292,11 @@ def q347_identity_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort below device ids).
 
     Scale: edges are two distinct map-side projections of the event
-    scan; min-label propagation runs ONE equi-join + ONE groupBy-min
-    per round with lineage truncated per round
-    (operators/graph.connected_components; household stars have
-    single-digit diameter, the q76 log-star alternation is the
-    adversarial-diameter fallback); the histogram is a second
-    bounded agg. Nothing driver-side at any corpus size.
+    scan; CC is the large-star/small-star operator
+    (operators/graph.connected_components: O(log n) rounds of ONE
+    equi-join + ONE groupBy-min, lineage truncated per round); the
+    histogram is a second bounded agg. Nothing driver-side at any
+    corpus size.
     """
     from g_etl_spark.operators import graph as G
 
@@ -4536,10 +4427,9 @@ def q361_incremental_connected_components(
     a component-graph whose node count is the number of AFFECTED
     components — at 100 TB that is the difference between touching
     the delta and re-shuffling every edge ever ingested. All three
-    CC runs here use the large-star/small-star O(log n) alternation
-    (the chain fixture's diameter defeats plain propagation — q76's
-    lesson; a real near-dup component graph is star-shaped and
-    either scheme converges in single digits).
+    CC runs use the large-star/small-star O(log n) alternation
+    (operators/graph.py), so the chain fixture's diameter costs
+    log-many rounds, not one per hop (q76's lesson).
     """
     from g_etl_spark.operators import graph as G
 
@@ -4561,7 +4451,7 @@ def q361_incremental_connected_components(
     )
     # stored state: day-1 labeling + singletons for nodes the day-1
     # edges never saw (isolated until the delta arrives)
-    lbl1 = G.connected_components_logstar(e1)
+    lbl1 = G.connected_components(e1)
     c1 = (
         nodes.join(lbl1, "node", "left")
         .select("node", F.coalesce("component", F.col("node")).alias("lbl"))
@@ -4575,7 +4465,7 @@ def q361_incremental_connected_components(
         .select(F.col("lu").alias("id_a"), F.col("lv").alias("id_b"))
         .distinct()
     )
-    lbl2 = G.connected_components_logstar(proj)
+    lbl2 = G.connected_components(proj)
     merged = (
         c1.join(
             lbl2.withColumnRenamed("node", "lbl").withColumnRenamed(
@@ -4588,7 +4478,7 @@ def q361_incremental_connected_components(
     )
     day1 = c1.groupBy("lbl").agg(F.count(F.lit(1)).alias("sz"))
     inc = merged.groupBy("final").agg(F.count(F.lit(1)).alias("sz"))
-    full = G.connected_components_logstar(all_e).groupBy("component").agg(
+    full = G.connected_components(all_e).groupBy("component").agg(
         F.count(F.lit(1)).alias("sz")
     )
 
@@ -6299,8 +6189,8 @@ def q451_cluster_policy_propagation(
     SOURCE, as licensing actually does), and a conflict flag marking
     clusters whose members disagree — the rows a legal review reads.
 
-    Scale: q444's Σ occ(gram)² pair bound + CC rounds = cluster
-    diameter (near-dup clusters are shallow); the policy rollup is
+    Scale: q444's Σ occ(gram)² pair bound + CC (O(log n) rounds,
+    operators/graph.py); the policy rollup is
     cluster-grain. The one corpus pass is the gram fan-out.
     """
     from g_etl_spark.operators import graph as G
@@ -6720,8 +6610,8 @@ def q460_weighted_cluster_cohesion(
     is arguably wrong for the former (the conservative reviewer
     splits at the weak link; this table is where they'd see it).
 
-    Scale: identical to q451 (Σ occ(gram)² pair bound, CC rounds =
-    cluster diameter) plus one cluster-grain weighted rollup — the
+    Scale: identical to q451 (Σ occ(gram)² pair bound, O(log n) CC
+    rounds) plus one cluster-grain weighted rollup — the
     weights ride the existing pair rows, nothing new shuffles at
     corpus grain.
     """
@@ -7106,7 +6996,7 @@ def q474_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate pins leak_pairs = 0 through the hash, so a regression in
     the cluster keying breaks correctness, not just a metric.
 
-    Scale: q444's Σ occ(gram)² edges + CC (cluster diameter rounds);
+    Scale: q444's Σ occ(gram)² edges + CC (O(log n) rounds);
     split assignment is one map-side md5 per doc; the leak audit
     joins |dup pairs| (not corpus²). The same construction swaps in
     q52's MinHash pairs for fuzzier edges unchanged.

@@ -588,14 +588,14 @@ def q170_grid_hotspot_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n²) distance pairs anywhere, unlike point-space DBSCAN. CC runs
     the large-star/small-star alternation (operators/graph.py):
     dense-cell clusters are CHAINS of adjacent cells (diameter ~
-    cluster length), where min-label propagation pays one round per
-    hop but log-star converges in O(log n). The dense-cell graph (a
+    cluster length), and log-star converges in O(log n) rounds
+    instead of one per hop. The dense-cell graph (a
     few hundred nodes at sf0.1) fits in one partition, so the
     operator's per-partition contraction solves it with no
     distributed round: 83 → 18 Spark jobs per call and 4.2-5.9 s →
     1.2-1.7 s warm at sf0.1 (4 cores, same-session A/B).
     """
-    from g_etl_spark.operators.graph import connected_components_logstar as connected_components
+    from g_etl_spark.operators.graph import connected_components
 
     pts = _points(spark, sf_dir).select(
         F.floor(F.col("lat") * 2).cast("long").alias("cx"),

@@ -151,9 +151,9 @@ def main() -> None:
     )
 
     # 6. connected components at scale: 2M-edge graph of 3-node
-    # chains (a-b, b-c) — measures the per-round join+groupBy shuffle
-    # and the fixpoint loop (diameter 2 -> 3 rounds incl. the no-op
-    # convergence round)
+    # chains (a-b, b-c) — measures the per-partition contraction and
+    # whatever large-star/small-star rounds the chains cut by partition
+    # boundaries still need before the star-forest test passes
     from g_etl_spark.operators.graph import connected_components
 
     n_comp = max(n_rows, 1_000_000)

@@ -220,43 +220,49 @@ def test_connected_components_transitive_chain(spark):
     assert summary[20] == (2, "20,21")
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
-    """A chain longer than max_iter rounds must raise, not return a
-    silently-split partial labeling."""
-    import pytest as _pytest
-
-    from g_etl_spark.operators import graph as G
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(8)], "id_a long, id_b long"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        G.connected_components(chain, max_iter=3)
-    # and with enough rounds the same chain converges to one component
-    labels = G.connected_components(chain, max_iter=10)
-    assert {r.component for r in labels.collect()} == {0}
-
-
 def _chain(spark, n=120):
     return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
 
 
+def test_connected_components_long_chain_at_default_rounds(spark):
+    """A 120-node chain (diameter 119) comes out as one component with
+    the default ``max_iter``: rounds are O(log n), not one per hop."""
+    from g_etl_spark.operators import graph as G
+
+    labels = {r.node: r.component for r in G.connected_components(_chain(spark)).collect()}
+    assert labels == {i: 0 for i in range(120)}
+
+
+def _union_find_labels(pairs):
+    """Reference labeling in plain Python: node -> smallest id of its
+    component, over the edges with two non-NULL, distinct endpoints."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is not None and b is not None and a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_logstar_matches_propagation_and_handles_long_chains(spark):
-    """large-star/small-star must produce the identical labeling as
-    min-label propagation, and converge on a chain whose diameter far
-    exceeds propagation's round budget (the O(log n) claim — Kiveris
-    et al. SoCC'14).
+    """large-star/small-star must produce the labeling of a plain
+    Python union-find over the same pairs, and converge on a chain
+    whose diameter far exceeds its round budget (the O(log n) claim —
+    Kiveris et al. SoCC'14).
 
     Each graph runs twice: as configured, where these small graphs
     coalesce into one partition and the per-partition contraction
     solves them outright, and with partition coalescing off, where the
     deduplicated edges spread over every shuffle partition, the
     contraction leaves pieces that cross partitions and the
-    distributed rounds must finish the job. Labels equal propagation's
-    on every node with a non-NULL, non-self edge; nodes whose only
-    edges are self-loops or NULL-ended are absent (logstar drops those
-    edges, propagation keeps self-loop-only nodes, so only the shared
-    nodes are compared)."""
+    distributed rounds must finish the job. Nodes whose only edges are
+    self-loops or NULL-ended are absent."""
     import random
 
     from g_etl_spark.operators import graph as G
@@ -266,12 +272,10 @@ def test_logstar_matches_propagation_and_handles_long_chains(spark):
     multi = [(rng.randrange(300), rng.randrange(300)) for _ in range(260)]
     multi += multi[:20] + [(b, a) for a, b in multi[20:40]]  # duplicates, reversals
     multi += [(900, 900), (901, None), (None, 902), (5, 5), (7, None)]
-    cases = []
-    for pairs in (mixed, multi):
-        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
-        touched = {n for a, b in pairs if a is not None and b is not None and a != b for n in (a, b)}
-        want = {r.node: r.component for r in G.connected_components(edges, max_iter=100).collect()}
-        cases.append((edges, {n: want[n] for n in touched}))
+    cases = [
+        (spark.createDataFrame(pairs, "id_a long, id_b long"), _union_find_labels(pairs))
+        for pairs in (mixed, multi)
+    ]
 
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(key)
@@ -279,17 +283,15 @@ def test_logstar_matches_propagation_and_handles_long_chains(spark):
         for coalesce in ("true", "false"):
             spark.conf.set(key, coalesce)
             for edges, want in cases:
-                got = {r.node: r.component for r in G.connected_components_logstar(edges).collect()}
+                got = {r.node: r.component for r in G.connected_components(edges).collect()}
                 assert got == want
             assert not {900, 901, 902} & set(got)
-            # 120-node chain: diameter 119 — propagation would need 119
-            # rounds, the alternation label set must still be exactly
-            # one component
-            labels = {r.node: r.component for r in G.connected_components_logstar(_chain(spark)).collect()}
+            # 120-node chain: diameter 119, still exactly one component
+            labels = {r.node: r.component for r in G.connected_components(_chain(spark)).collect()}
             assert labels == {i: 0 for i in range(120)}
         # uncoalesced, the chain is not solved inside one partition
         with pytest.raises(RuntimeError, match="did not converge"):
-            G.connected_components_logstar(_chain(spark), max_iter=0)
+            G.connected_components(_chain(spark), max_iter=0)
     finally:
         spark.conf.set(key, prev)
 
@@ -307,7 +309,7 @@ def test_logstar_small_graph_costs_a_handful_of_jobs(spark):
     try:
         labels = {
             r.node: r.component
-            for r in G.connected_components_logstar(_chain(spark)).collect()
+            for r in G.connected_components(_chain(spark)).collect()
         }
     finally:
         sc._jsc.clearJobGroup()
