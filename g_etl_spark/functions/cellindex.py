@@ -16,21 +16,20 @@ Providers:
   `h3` lib; ids are NOT interchangeable with quadtree ids — reindex
   when switching).
 
-Select per dataset via ``options.cell_index`` in datasets.yml, or
-globally via the ``G_ETL_SPARK_CELL_INDEX`` environment variable.
+Select per dataset via ``options.cell_index`` in datasets.yml; a
+dataset without it is indexed with the quadtree.
 """
 
 from __future__ import annotations
 
-import os
-
 
 def get_index(name=None):
-    """Resolve a provider: None/str name → provider object; anything
-    else is assumed to already BE a provider and passed through."""
+    """Resolve a provider: None/str name → provider object (None means
+    the quadtree); anything else is assumed to already BE a provider
+    and passed through."""
     if name is not None and not isinstance(name, str):
         return name
-    name = name or os.environ.get("G_ETL_SPARK_CELL_INDEX") or "quadtree"
+    name = name or "quadtree"
     if name == "quadtree":
         from g_etl_spark.functions import grid
 

@@ -8,8 +8,8 @@ latlng_to_cell / polyfill / compact_cells / grid_disk_py /
 cell_to_boundary_wkt ...). The default provider is the quadtree
 (`functions/grid`) because it is pure JVM-side arithmetic; this
 adapter swaps in genuine H3 hexagons when the `h3` lib exists —
-select it per dataset with ``options.cell_index: h3`` or globally
-with ``G_ETL_SPARK_CELL_INDEX=h3`` (see functions/cellindex.py).
+select it per dataset with ``options.cell_index: h3`` (see
+functions/cellindex.py).
 
 **Cell-ID compatibility caveat**: the quadtree and H3 are different
 cell SYSTEMS. Cell ids, boundaries, areas, and k-ring adjacency all

@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from g_etl_spark.queries import register
+from g_etl_spark.session import scoped_confs
 from g_etl_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -12266,10 +12267,7 @@ def q442_partition_layout_executed(
         # collectLeaves() are not the executed scan instances (their
         # metrics stay zero); the probes are tiny pruned scans, so run
         # them with AQE off and restore the conf after.
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_old = spark.conf.get(aqe_key)
-        spark.conf.set(aqe_key, "false")
-        try:
+        with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
             for wname, pred in _Q433_WORKLOAD.items():
                 full = pred
                 pkey_cond = _Q442_PKEY_SCAN.get((chosen, wname))
@@ -12286,8 +12284,6 @@ def q442_partition_layout_executed(
                 rows.append(
                     (chosen, wname, n_dirs, parts_real, files_real, n_match)
                 )
-        finally:
-            spark.conf.set(aqe_key, aqe_old)
         return spark.createDataFrame(
             sorted(rows, key=lambda r: r[1]), schema
         )
@@ -14004,10 +14000,7 @@ def q459_zorder_layout_executed(
         # interrupted write left _temporary/hidden files behind
         n_files = len(stats)
         rows = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_old = spark.conf.get(aqe_key)
-        spark.conf.set(aqe_key, "false")
-        try:
+        with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
             for wname, pred in _Q459_WORKLOAD.items():
                 probe = back.filter(F.expr(pred)).agg(
                     F.count(F.lit(1)).cast("long").alias("n")
@@ -14028,8 +14021,6 @@ def q459_zorder_layout_executed(
                 rows.append(
                     (chosen, wname, n_files, files_read, scanned, n_match)
                 )
-        finally:
-            spark.conf.set(aqe_key, aqe_old)
         return spark.createDataFrame(
             sorted(rows, key=lambda r: r[1]), schema
         )
@@ -14708,10 +14699,7 @@ def q472_append_delta_pruning_debt(
         # files_read/_file_rows if leftovers exist under the dirs
         n_files = len(stats)
         rows = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_old = spark.conf.get(aqe_key)
-        spark.conf.set(aqe_key, "false")
-        try:
+        with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
             # per-file row counts for the predicted base/delta split
             import pyarrow.parquet as _pq
 
@@ -14774,8 +14762,6 @@ def q472_append_delta_pruning_debt(
                         share,
                     )
                 )
-        finally:
-            spark.conf.set(aqe_key, aqe_old)
         return spark.createDataFrame(
             sorted(rows, key=lambda r: r[0]), schema
         )
@@ -15107,10 +15093,7 @@ def q477_compaction_executed(
         )
         st_after = L.file_stats(dirs["after"], ["user_id", "vc"])
         rows = []
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_old = spark.conf.get(aqe_key)
-        spark.conf.set(aqe_key, "false")
-        try:
+        with scoped_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
             for wname, pred in _Q459_WORKLOAD.items():
 
                 def _surv(envf):
@@ -15138,8 +15121,6 @@ def q477_compaction_executed(
                 rows.append(
                     (wname, fb, rows_b, fa, rows_a, n_match, rec)
                 )
-        finally:
-            spark.conf.set(aqe_key, aqe_old)
         return spark.createDataFrame(
             sorted(rows, key=lambda r: r[0]), schema
         )

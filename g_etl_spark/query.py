@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from g_etl_spark import warehouse as wh
 from g_etl_spark.functions import geo, geo_udfs, grid
+from g_etl_spark.session import scoped_confs
 
 DEFAULT_QUERY_RES = 14  # ~1.2 km cells (≙ reference res 8, ~0.74 km²)
 ISIN_MAX_CELLS = 2048  # IN-set vs broadcast-join crossover
@@ -239,8 +240,9 @@ def query_polygon_pandas(*args, **kwargs):
 # Confs baked into prepared serving plans: results are dashboard-sized
 # (one polygon's worth of rows), so a single shuffle partition removes
 # 31 empty-task launches, and AQE's runtime re-planning only adds
-# latency at this result size.
-_SERVING_CONFS = {
+# latency at this result size. bench.py bakes its served hot-polygon
+# plan under the same confs.
+SERVING_CONFS = {
     "spark.sql.adaptive.enabled": "false",
     "spark.sql.shuffle.partitions": "1",
 }
@@ -310,17 +312,9 @@ class PolygonServer:
         return df
 
     def _prepare(self, polygon_wkt, resolution, datasets, aggregation, exact) -> DataFrame:
-        spark = self._spark
-        old: dict[str, str | None] = {}
-        for k, v in _SERVING_CONFS.items():
-            try:
-                old[k] = spark.conf.get(k)
-            except Exception:
-                old[k] = None
-            spark.conf.set(k, v)
-        try:
+        with scoped_confs(self._spark, SERVING_CONFS):
             df = query_polygon(
-                spark,
+                self._spark,
                 self._warehouse,
                 polygon_wkt,
                 resolution=resolution,
@@ -333,12 +327,6 @@ class PolygonServer:
             # confs are baked in and later calls skip straight to
             # execution (no job runs here)
             df._jdf.queryExecution().executedPlan()
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
         return df
 
     def invalidate(self) -> None:

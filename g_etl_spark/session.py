@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -69,12 +71,22 @@ def get_spark(app_name: str = "g_etl_spark", master: str | None = None) -> Spark
     return spark
 
 
-def tune_for_scale(spark: SparkSession, target_partitions: int) -> None:
-    """Adjust shuffle parallelism for a given input scale.
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL confs for the body of a ``with`` block.
 
-    On a real cluster you would size ``spark.sql.shuffle.partitions``
-    so post-shuffle partitions land near 128-200 MB. AQE coalescing
-    makes the exact number less critical, but the ceiling still
-    matters at 100 TB.
+    On exit each key gets its previous value back, or is unset if it
+    had none, also when the body raises: a scoped override never leaks
+    into the session's later queries.
     """
-    spark.conf.set("spark.sql.shuffle.partitions", str(target_partitions))
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

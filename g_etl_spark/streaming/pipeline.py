@@ -30,6 +30,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from g_etl_spark.session import scoped_confs
+
 _STREAM_TIMEOUT_S = 300
 _STREAM_PART_BYTES = 64 << 20  # ~64 MB of source per state partition
 
@@ -325,9 +327,7 @@ def start_incremental_grid_ingest(
             stages.normalize_geometry_column(batch_df), index=index
         )
         exploded = stages.explode_cells(stages.normalize(staged, field_mapping))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
             (
                 exploded.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
@@ -335,8 +335,6 @@ def start_incremental_grid_ingest(
                 .partitionBy("_batch_id")
                 .parquet(out_path)
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if refresh_stats:
             # incremental: only the cell_prefix partitions this batch
             # touched are recomputed (O(touched region), not O(index))

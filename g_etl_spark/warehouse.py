@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from g_etl_spark.functions import grid
+from g_etl_spark.session import scoped_confs
 
 GRID_SUFFIX = "_grid"
 OBJECTS_SUFFIX = "_objects"
@@ -180,17 +181,13 @@ def refresh_grid_stats_incremental(
         grid_stats(idx.filter(F.col("cell_prefix").isin(prefixes)).drop("cell_prefix"))
         .withColumn("cell_prefix", prefix_expr)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             stats.write.mode("overwrite")
             .option("compression", "zstd")
             .partitionBy("cell_prefix")
             .parquet(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return len(prefixes)
 
 
@@ -213,24 +210,19 @@ def compact_grid_index(
     grid_cell groups spatial neighbors; Z-interleaving dataset_id
     keeps per-dataset queries prunable in the SAME layout.
 
-    Scale: sizes shuffle parallelism to the target file count via
-    session.tune_for_scale (at 100 TB, num_files follows data volume
+    Scale: sizes shuffle parallelism to the target file count for the
+    write only (at 100 TB, num_files follows data volume
     so each file lands near 128-200 MB); the write itself is one
     range-shuffle (operators/layout.write_zordered), amortized over
     every subsequent polygon query like the reference's one-time
     index build.
     """
     from g_etl_spark.operators import layout
-    from g_etl_spark.session import tune_for_scale
 
     idx = grid_index(spark, warehouse)
     path = table_path(warehouse, "mart", COMPACT_INDEX_TABLE)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    tune_for_scale(spark, num_files)
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(num_files)}):
         layout.write_zordered(idx, path, ["grid_cell", "dataset_id"], num_files)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return path
 
 

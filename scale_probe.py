@@ -7,7 +7,8 @@ testdata (deterministic id-shifted copies — no new data invented).
 Writes measured numbers + derived scaling commentary to stderr and a
 one-line JSON to stdout. This is evidence for the "would this hold at
 1000×?" question: the plans under test are the same ones bench.py
-runs, only bigger.
+runs, only bigger. bench.py runs sections 1-3 at 25x through
+``replicate_events`` and ``grid_polygon_dedup``.
 """
 
 from __future__ import annotations
@@ -27,13 +28,10 @@ from g_etl_spark.session import get_spark
 from g_etl_spark.tables import load
 
 
-def main() -> None:
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("scale_probe")
-    out: dict[str, float] = {"replication": factor}
-
-    # --- replicate events x factor (10M rows at factor=100) ---------
+def replicate_events(spark, sf_dir: str, factor: int):
+    """The events table x ``factor`` as id-shifted copies, with
+    synthetic lat/lng spread over the query region. Returns
+    ``(big, n_rows)``."""
     e = load(spark, sf_dir, "events")
     n_base = e.count()
     reps = spark.range(factor).select(F.col("id").alias("rep"))
@@ -51,6 +49,15 @@ def main() -> None:
     )
     n_rows = n_base * factor
     print(f"# events: {n_base} x {factor} = {n_rows}", file=sys.stderr)
+    return big, n_rows
+
+
+def grid_polygon_dedup(big, n_rows: int) -> dict[str, float]:
+    """Sections 1-3 over the replicated events: grid rollup, hot
+    polygon query on a cached cell index, exact dedup. Returns their
+    seconds keyed ``grid_stats_rollup_sec``, ``index_materialize_sec``,
+    ``hot_polygon_query_sec`` and ``exact_dedup_sec``."""
+    out: dict[str, float] = {}
 
     # 1. grid indexing + stats rollup (scan + 1 exchange)
     t0 = time.time()
@@ -111,6 +118,18 @@ def main() -> None:
         f"{out['exact_dedup_sec']}s",
         file=sys.stderr,
     )
+    return out
+
+
+def main() -> None:
+    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 100
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("scale_probe")
+    out: dict[str, float] = {"replication": factor}
+
+    # --- replicate events x factor (10M rows at factor=100) ---------
+    big, n_rows = replicate_events(spark, sf_dir, factor)
+    out.update(grid_polygon_dedup(big, n_rows))
 
     # 4. sessionization window at scale
     t0 = time.time()
@@ -135,6 +154,7 @@ def main() -> None:
     from g_etl_spark.operators.dedup import chunk_dedup
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    reps = spark.range(factor).select(F.col("id").alias("rep"))
     docs_big = (
         d.crossJoin(reps)
         .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 1_000_000)

@@ -196,7 +196,7 @@ def test_stage_chain_with_h3_provider(spark):
     assert len(crows) == 12 and all(len(r.grid_cells_compact) == 1 for r in crows)
 
 
-def test_get_index_resolution(monkeypatch):
+def test_get_index_resolution():
     assert get_index() is grid
     assert get_index("quadtree") is grid
     fake, _ = make_fake_h3()
@@ -204,8 +204,6 @@ def test_get_index_resolution(monkeypatch):
     assert get_index(obj) is obj  # passthrough
     with pytest.raises(ValueError):
         get_index("voronoi")
-    monkeypatch.setenv("G_ETL_SPARK_CELL_INDEX", "quadtree")
-    assert get_index() is grid
 
 
 def test_h3_index_requires_lib_without_injection():

@@ -424,3 +424,29 @@ def test_polygon_server_prepared_plans(spark, warehouse_dir):
     small.query(wkt, aggregation="stats")
     small.query(wkt, aggregation="heatmap")
     assert small.query(wkt, aggregation="objects") is not a
+
+
+def test_scoped_confs_restores_set_and_unset_keys(spark):
+    """scoped_confs gives a key that was set its old value back and
+    unsets a key that was unset, on a normal exit and when the body
+    raises."""
+    from g_etl_spark.session import scoped_confs
+
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.g_etl_spark.test.scoped"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    confs = {set_key: "3", unset_key: "on"}
+
+    with scoped_confs(spark, confs):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(unset_key) == "on"
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_confs(spark, confs):
+            assert spark.conf.get(unset_key) == "on"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
